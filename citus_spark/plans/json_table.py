@@ -49,10 +49,6 @@ def _unsupported_keyword(inner: str) -> str | None:
     return None
 
 
-def has_json_table(sql: str) -> bool:
-    return bool(_JSON_TABLE.search(sql))
-
-
 def _root_selector(expr: str, path: str) -> str:
     """Context expr + PG root path → a Spark expression yielding the
     JSON array text to explode."""

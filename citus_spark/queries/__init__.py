@@ -355,8 +355,9 @@ def _write_pkg_zip(pkg_dir: str) -> str:
     match contents"). Hashing the bytes into the filename means a
     different tree gets a different file, an identical tree re-lands
     the same bytes, and the write-then-atomic-rename never exposes a
-    half-written zip to a concurrent reader."""
-    import hashlib
+    half-written zip to a concurrent reader. An existing zip is reused
+    only when it is this user's and its full sha256 matches the bytes
+    just built; otherwise the zip lands in a per-user 0700 directory."""
     import tempfile
     import zipfile
 
@@ -376,17 +377,23 @@ def _write_pkg_zip(pkg_dir: str) -> str:
                             full, os.path.dirname(pkg_dir)
                         )
                         z.write(full, rel)
-        with open(tmp, "rb") as fh:
-            digest = hashlib.sha256(fh.read()).hexdigest()[:12]
-        zpath = os.path.join(zdir, f"citus_spark_pkg_{digest}.zip")
-        # world-readable: executors (and other users' sessions that
-        # land on the same digest) must be able to fetch it
+        digest = _sha256(tmp)
+        name = f"citus_spark_pkg_{digest[:12]}.zip"
+        zpath = os.path.join(zdir, name)
+        # world-readable: executors running as another user must be
+        # able to fetch it
         os.chmod(tmp, 0o644)
-        if os.path.exists(zpath):
-            # same digest ⇒ same bytes — nothing to do, and on a
-            # sticky-bit /tmp replacing ANOTHER USER's file would
-            # raise EPERM
+        if os.path.exists(zpath) and not _own_copy(zpath, digest):
+            # someone else's file under our name (a shared sticky-bit
+            # /tmp lets any user plant one, and its owner could still
+            # rewrite it after a check): never ship it — land ours in
+            # a directory only this user can write
+            zdir = _private_dir(zdir)
+            zpath = os.path.join(zdir, name)
+        if _own_copy(zpath, digest):
             os.unlink(tmp)
+            # a zip in use must never look stale to the sweep below
+            os.utime(zpath)
         else:
             os.replace(tmp, zpath)
     except BaseException:
@@ -409,6 +416,43 @@ def _write_pkg_zip(pkg_dir: str) -> str:
         except OSError:
             pass
     return zpath
+
+
+def _sha256(path: str) -> str:
+    import hashlib
+
+    with open(path, "rb") as fh:
+        return hashlib.sha256(fh.read()).hexdigest()
+
+
+def _own_copy(path: str, digest: str) -> bool:
+    """True when `path` belongs to this user and holds exactly the
+    bytes whose sha256 is `digest`."""
+    try:
+        return os.stat(path).st_uid == os.getuid() and _sha256(path) == digest
+    except OSError:
+        return False
+
+
+def _private_dir(base: str) -> str:
+    """A 0700 directory of this user's under `base`: the per-user one,
+    or a fresh one when that name is taken by someone else."""
+    import stat
+    import tempfile
+
+    d = os.path.join(base, f"citus_spark_{os.getuid()}")
+    try:
+        os.mkdir(d, 0o700)
+    except FileExistsError:
+        pass
+    st = os.lstat(d)
+    if (
+        stat.S_ISDIR(st.st_mode)
+        and st.st_uid == os.getuid()
+        and not st.st_mode & 0o077
+    ):
+        return d
+    return tempfile.mkdtemp(prefix="citus_spark_", dir=base)
 
 
 def _serial_final_jsession(spark: SparkSession):

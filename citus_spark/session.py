@@ -748,6 +748,7 @@ class DistributedSession(MgmtSurfaceMixin, WriteFunnelMixin):
             pg_casts,
             rewrite_count_distinct,
         )
+        from citus_spark.plans.router import router_key
 
         import re as _re
 
@@ -1011,7 +1012,8 @@ class DistributedSession(MgmtSurfaceMixin, WriteFunnelMixin):
         if into is not None:
             return into
         query = self._apply_pg_rewrites(query)
-        query = self._route_isolated_tenants(query)
+        key = router_key(query, self.catalog)
+        query = self._route_isolated_tenants(query, key)
         if self.count_distinct_error_rate:
             query = rewrite_count_distinct(query, self.count_distinct_error_rate)
         # WITH x AS MATERIALIZED (...) — evaluate once into a cached
@@ -1022,36 +1024,12 @@ class DistributedSession(MgmtSurfaceMixin, WriteFunnelMixin):
         for name, body in mat:
             self.materialize(name, self.spark.sql(body))
         df = self.spark.sql(query)
-        self._record_statement(query, df)
-        return df
-
-    def _record_statement(self, query: str, df: DataFrame) -> None:
-        """citus_stat_statements bookkeeping (stats.py): fingerprint
-        the statement and extract the router partition key from the
-        analyzed plan. Plan-string rendering costs ~ms at plan time;
-        never touches data."""
-        from citus_spark.stats import extract_partition_key_scoped
-
-        dist = {
-            name: t.dist_col
-            for name, t in self.catalog.tables().items()
-            if t.is_hash_distributed and t.dist_col
-        }
-        key = None
-        if dist:
-            try:
-                # analyzed plan: resolves which col#id attributes
-                # belong to each distributed relation; optimized plan:
-                # literals are constant-folded back to bare text (the
-                # analyzed plan wraps them in casts)
-                analyzed = str(df._jdf.queryExecution().analyzed())
-                plan = str(df._jdf.queryExecution().optimizedPlan())
-                key = extract_partition_key_scoped(analyzed, plan, dist)
-            except Exception:
-                key = None
         self.stat_statements.record(
-            query, key, executor="router" if key is not None else "adaptive"
+            query,
+            None if key is None else key.value,
+            executor="adaptive" if key is None else "router",
         )
+        return df
 
     def _writable_entry(self, name: str, verb: str):
         """Resolve a writing statement's target: a catalog table whose

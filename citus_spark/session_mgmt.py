@@ -1116,250 +1116,61 @@ class MgmtSurfaceMixin:
         )
         return int(new_id)
 
-    def _route_isolated_tenants(self, query: str) -> str:
+    def _route_isolated_tenants(self, query: str, key) -> str:
         """Router-planner analog for isolated tenants (↔ reference
-        multi_router_planner.c): a statement whose restriction pins an
-        isolated table to its isolated tenant value is rewritten to
-        scan ONLY that tenant's storage partition (Catalyst partition
-        pruning does the rest).
-
-        Without the reference's restriction-equivalence analysis a
-        textual router must prove predicate OWNERSHIP and POLARITY
-        before narrowing a scan, so routing fires only for the shape
-        it can prove single-shard:
-
-        - the statement reads exactly ONE relation (one SELECT, one
-          FROM, no JOIN keyword, no depth-0 comma in the FROM clause
-          — a dist-col equality then necessarily restricts that
-          relation),
-        - the equality is a depth-0 conjunct of the WHERE clause
-          (never inside a subquery, CASE, or function argument),
-        - the WHERE clause contains no OR / NOT / CASE / IS / `!`
-          (any of which could invert or widen the restriction),
-        - the column is unqualified or qualified by exactly the table
-          name or its alias (a struct-field access like
-          `profile.user_id` never matches),
-        - the literal is a full token (`= 7` must not match `= 7.5`)
-          and is not itself compared onward (`user_id = 7 = flag`).
-
-        Anything else runs the normal full-relation plan, which is
-        always correct — exactly the reference's fallback from the
-        router to the adaptive executor."""
-        import re as _re
-
-        tables = [
-            t
-            for t in self.catalog.tables().values()
-            if getattr(t, "isolated", None) or getattr(t, "splits", None)
-        ]
-        if not tables:
+        multi_router_planner.c): a single-relation statement whose
+        router key (plans/router.py) pins an isolated or split table
+        is rewritten to scan ONLY that tenant's storage partition
+        (Catalyst partition pruning does the rest). Anything else runs
+        the normal full-relation plan, which is always correct —
+        exactly the reference's fallback from the router to the
+        adaptive executor."""
+        if key is None or key.relations != 1:
             return query
-        from citus_spark.plans.rewrites import _masked_spans
-
-        spans = _masked_spans(query)
-
-        def in_code(pos: int) -> bool:
-            return not any(a <= pos < b for a, b in spans)
-
-        def code_count(pat: str) -> int:
-            return sum(
-                1 for m in _re.finditer(pat, query, _re.I)
-                if in_code(m.start())
-            )
-
-        # single-relation statements only (ownership proof)
-        if (
-            code_count(r"\bSELECT\b") != 1
-            or code_count(r"\bFROM\b") != 1
-            or code_count(r"\bJOIN\b") != 0
-        ):
+        t = self.catalog.get(key.table)
+        if not (t.isolated or t.splits):
             return query
+        # Spark's string↔numeric comparison COERCES (on a string column
+        # `k = 7` also matches '07'), while routing goes by the literal
+        # text, so an unquoted literal never routes a string column
+        dtype = dict(self.spark.table(t.name).dtypes)[t.dist_col]
+        label = None
+        sid = (t.isolated or {}).get(key.value)
+        if sid is not None and (key.quoted or dtype != "string"):
+            label = f"s{sid}"
+        elif t.splits:
+            # a SPLIT table's storage is partitioned by the shard
+            # label for EVERY bucket, so a dist-col equality can
+            # route to one directory (the reference's router prunes
+            # to one shard the same way) — but ONLY when the literal's
+            # type matches the column exactly, since the shard hash
+            # is taken of the literal. Integer literals must also fit
+            # the column type (an overflowing literal is a valid
+            # always-false comparison, never a routing error).
+            bits = {
+                "tinyint": 7, "smallint": 15, "int": 31, "bigint": 63,
+            }.get(dtype)
+            val = None
+            if key.quoted and dtype == "string":
+                val = key.value
+            elif not key.quoted and bits:
+                if -(1 << bits) <= int(key.value) < (1 << bits):
+                    val = int(key.value)
+            if val is not None:
+                from citus_spark import cluster
 
-        # the WHERE clause region at paren depth 0
-        depth = 0
-        where_at = -1
-        where_end = len(query)
-        clause_kw = _re.compile(
-            r"\b(WHERE|GROUP|HAVING|ORDER|LIMIT|UNION|INTERSECT|EXCEPT)\b",
-            _re.I,
-        )
-        i = 0
-        while i < len(query):
-            if not in_code(i):
-                i += 1
-                continue
-            c = query[i]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            elif depth == 0:
-                m = clause_kw.match(query, i)
-                if m and (i == 0 or not (query[i - 1].isalnum()
-                                         or query[i - 1] == "_")):
-                    if m.group(1).upper() == "WHERE":
-                        where_at = i
-                    elif where_at >= 0:
-                        where_end = i
-                        break
-                    i = m.end()
-                    continue
-            i += 1
-        if where_at < 0:
-            return query
-        where_region = query[where_at:where_end]
-        if (
-            _re.search(r"\b(OR|NOT|CASE|IS)\b", where_region, _re.I)
-            or "!" in where_region
-        ):
-            return query
-
-        # prefix depth table over the WHERE region: one linear pass,
-        # O(1) per later lookup (review finding: the per-match rescans
-        # were quadratic once any table was isolated)
-        depth_at: dict[int, int] = {}
-        d0 = 0
-        for j in range(where_at, where_end):
-            depth_at[j] = d0
-            if in_code(j):
-                if query[j] == "(":
-                    d0 += 1
-                elif query[j] == ")":
-                    d0 -= 1
-
-        def depth0_in_where(pos: int) -> bool:
-            return where_at <= pos < where_end and depth_at.get(pos) == 0
-
-        out = query
-        for t in tables:
-            refs = [
-                m
-                for m in _re.finditer(
-                    rf"\b(FROM)\s+({t.name})\b", out, _re.I
+                sid = cluster.get_shard_id_for_distribution_column(
+                    self, t.name, val
                 )
-                if in_code(m.start())
-            ]
-            if len(refs) != 1:
-                continue
-            m = refs[0]
-            tail = out[m.end():]
-            am = _re.match(r"\s+(?:AS\s+)?([A-Za-z_]\w*)", tail)
-            kw_after = (
-                "WHERE", "GROUP", "ORDER", "LIMIT", "ON", "JOIN",
-                "LEFT", "RIGHT", "FULL", "INNER", "CROSS", "UNION",
-                "INTERSECT", "EXCEPT", "HAVING", "AS", "USING",
-            )
-            alias = (
-                am.group(1)
-                if am and am.group(1).upper() not in kw_after
-                else None
-            )
-            # a depth-0 comma between the relation and WHERE is a
-            # comma-list join — a second relation this gate must treat
-            # like a JOIN keyword
-            from_tail_start = m.end() + (am.end() if alias else 0)
-            d = 0
-            comma_join = False
-            for j in range(from_tail_start, where_at):
-                if not in_code(j):
-                    continue
-                if query[j] == "(":
-                    d += 1
-                elif query[j] == ")":
-                    d -= 1
-                elif query[j] == "," and d == 0:
-                    comma_join = True
-                    break
-            if comma_join:
-                continue
-            # qualifier may only be the table name or its alias —
-            # `other.user_id` (impossible here) and struct-field paths
-            # like `profile.user_id` must never match
-            quals = [t.name] + ([alias] if alias else [])
-            qual_alt = "|".join(_re.escape(x) for x in quals)
-            # ONE shared anchor + ONE shared tail guard for both the
-            # isolated and the split-route patterns (they must stay in
-            # lockstep). The tail guard requires the literal to END
-            # its conjunct: any trailing operator (`= 7 + 1`,
-            # `= 'a' || x`, chained `=`) widens the value Spark
-            # actually compares, so those shapes never route.
-            lhs = (
-                rf"(?<![\w.$])(?:(?:{qual_alt})\s*\.\s*)?"
-                rf"{t.dist_col}\s*=\s*"
-            )
-            tail_guard = r"(?![\w.])(?!\s*[=+\-*/%|&^<>])"
-            label = None
-            for v, sid in (t.isolated or {}).items():
-                alts = [rf"'{_re.escape(v)}'"]
-                if _re.fullmatch(r"-?\d+", v):
-                    alts.append(_re.escape(v))
-                pred = lhs + rf"(?:{'|'.join(alts)})" + tail_guard
-                if any(
-                    in_code(x.start()) and depth0_in_where(x.start())
-                    for x in _re.finditer(pred, out, _re.I)
-                ):
-                    label = f"s{sid}"
-                    break
-            if label is None and getattr(t, "splits", None):
-                # a SPLIT table's storage is partitioned by the shard
-                # label for EVERY bucket, so a dist-col equality can
-                # route to one directory (the reference's router
-                # prunes to one shard the same way) — but ONLY when
-                # the literal's type matches the column exactly:
-                # Spark's string↔numeric comparison COERCES (the full
-                # plan would match '07' = 7), while the hash routes on
-                # the literal text, so a cross-type equality must run
-                # the full plan. Integer literals must also fit the
-                # column type (an overflowing literal is a valid
-                # always-false comparison, never a routing error), and
-                # backslash-bearing string literals are skipped (the
-                # simple lexer cannot prove their extent under Spark's
-                # escape rules).
-                dtype = dict(self.spark.table(t.name).dtypes)[t.dist_col]
-                int_ranges = {
-                    "tinyint": 7, "smallint": 15, "int": 31,
-                    "bigint": 63,
-                }
-                generic = lhs + r"('(?:[^'\\]|'')*'|-?\d+)" + tail_guard
-                for x in _re.finditer(generic, out, _re.I):
-                    if not (
-                        in_code(x.start()) and depth0_in_where(x.start())
-                    ):
-                        continue
-                    lit = x.group(1)
-                    if lit.startswith("'"):
-                        if dtype != "string":
-                            continue  # cross-type: full plan
-                        val = lit[1:-1].replace("''", "'")
-                    else:
-                        if dtype not in int_ranges:
-                            continue  # cross-type: full plan
-                        val = int(lit)
-                        bits = int_ranges[dtype]
-                        if not (-(1 << bits) <= val < (1 << bits)):
-                            continue  # overflow: valid, never routed
-                    from citus_spark import cluster
-
-                    sid = cluster.get_shard_id_for_distribution_column(
-                        self, t.name, val
-                    )
-                    _tn, label = cluster._shard_key(self, sid)
-                    break
-            if label is None:
-                continue
-            cols = ", ".join(self.spark.table(t.name).columns)
-            sub = (
-                f"(SELECT {cols} FROM __{t.name}_shards "
-                f"WHERE __citus_shard = '{label}')"
-            )
-            out = (
-                out[: m.start()]
-                + f"{m.group(1)} {sub}"
-                + ("" if alias else f" {t.name}")
-                + tail
-            )
-            return out
-        return out
+                _tn, label = cluster._shard_key(self, sid)
+        if label is None:
+            return query
+        cols = ", ".join(self.spark.table(t.name).columns)
+        a, b = key.from_item
+        return (
+            f"{query[:a]}(SELECT {cols} FROM __{t.name}_shards "
+            f"WHERE __citus_shard = '{label}') {key.alias}{query[b:]}"
+        )
 
     def create_time_partitions(
         self,

@@ -791,14 +791,6 @@ class TxCluster:
             os.unlink(tmp)
         return manifest
 
-    def list_restore_points(self) -> list[dict]:
-        out = []
-        for fn in sorted(os.listdir(self.dir)):
-            if fn.endswith(".restore.json"):
-                with open(os.path.join(self.dir, fn)) as f:
-                    out.append(json.load(f))
-        return out
-
     def restore_to_point(self, name: str) -> dict:
         """Reset every table in the manifest to its recorded version,
         atomically (one 2PC). Returns {alias: restored_to_version}."""

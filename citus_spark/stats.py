@@ -10,14 +10,16 @@ resource accounting possible.
 Spark analog: `DistributedSession.sql` records each statement here at
 plan time. Normalization (literals → ?) and the queryid hash follow
 pg_stat_statements' model so repeated calls of the same shape
-accumulate under one fingerprint. partition_key is extracted from the
-ANALYZED plan: an equality between a cataloged table's distribution
-column and a literal — the same test the reference's router planner
-applies (fast-path single-shard detection,
-planner/fast_path_router_planner.c). The executor column mirrors that
-split: 'router' when a partition key pins the statement to one
-bucket, else 'adaptive' (the reference's name for its parallel
-multi-shard executor).
+accumulate under one fingerprint. partition_key comes from the one
+pre-plan router detector, plans/router.py (`router_key`), which the
+session runs on the statement text before Catalyst plans it: an
+equality between a cataloged table's distribution column and a
+literal, the test the reference's router planner applies (fast-path
+single-shard detection, planner/fast_path_router_planner.c). The
+same key routes isolated tenants to their own storage partition. The
+executor column mirrors that split: 'router' when a partition key
+pins the statement to one shard, else 'adaptive' (the reference's
+name for its parallel multi-shard executor).
 
 Driver-memory footprint is one dict entry per query SHAPE (not per
 call), the same bound pg_stat_statements accepts; `reset()` is the
@@ -49,61 +51,6 @@ def query_id(normalized: str) -> int:
     exposes queryid as a signed bigint)."""
     h = hashlib.md5(normalized.encode()).digest()
     return int.from_bytes(h[:8], "big") & 0x7FFF_FFFF_FFFF_FFFF
-
-
-def _dist_attr_ids(analyzed: str, table: str, col: str) -> set[str]:
-    """Attribute ids bound to `table.col` in an analyzed-plan string:
-    each `SubqueryAlias table` introduces the relation whose output
-    attributes carry the ids used by every downstream Filter."""
-    ids: set[str] = set()
-    for m in re.finditer(rf"SubqueryAlias {re.escape(table)}\b", analyzed):
-        seg = analyzed[m.end() : m.end() + 4000]
-        rel = re.search(rf"\b{re.escape(col)}#(\d+)", seg)
-        if rel:
-            ids.add(rel.group(1))
-    return ids
-
-
-def extract_partition_key_scoped(
-    analyzed: str, optimized: str, dist: dict[str, str]
-) -> str | None:
-    """Router detection scoped to attributes that actually belong to a
-    catalog-distributed relation: the analyzed plan resolves which
-    `col#id` attributes come from each distributed table (ids are
-    stable through optimization), and only an equality between ONE of
-    those and a literal classifies the statement as router — an
-    equals-literal on a same-named column of an unrelated table no
-    longer pollutes per-tenant accounting."""
-    lit_pat = r"(-?\d+(?:\.\d+)?|[A-Za-z][A-Za-z0-9_.]*)(?![\w#.])"
-    for table, col in dist.items():
-        for aid in _dist_attr_ids(analyzed, table, col):
-            attr = rf"\b{re.escape(col)}#{aid}(?!\d)[A-Za-z]*"
-            m = re.search(
-                rf"{attr}\s*=\s*{lit_pat}", optimized
-            ) or re.search(rf"\b{lit_pat}\s*=\s*{attr}", optimized)
-            if m:
-                return m.group(1)
-    return None
-
-
-def extract_partition_key(plan_str: str, dist_cols: set[str]) -> str | None:
-    """Find a distribution-column-equals-literal predicate in an
-    analyzed-plan string (attributes print as `name#123` with an
-    optional type suffix). Either side may hold the literal. Returns
-    the literal text, or None for multi-shard statements."""
-    # the trailing (?![\w#.]) rejects attribute references: an
-    # attribute prints as name#id, so every prefix of its name is
-    # followed by a word char or '#', and backtracking cannot save it
-    lit_pat = r"(-?\d+(?:\.\d+)?|[A-Za-z][A-Za-z0-9_.]*)(?![\w#.])"
-    for col in dist_cols:
-        m = re.search(
-            rf"\b{re.escape(col)}#\d+[A-Za-z]*\s*=\s*{lit_pat}", plan_str
-        ) or re.search(
-            rf"\b{lit_pat}\s*=\s*{re.escape(col)}#\d+[A-Za-z]*", plan_str
-        )
-        if m:
-            return m.group(1)
-    return None
 
 
 class StatStatements:

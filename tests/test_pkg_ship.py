@@ -40,3 +40,41 @@ def test_zip_is_deterministic_and_complete():
     # world-readable so other sessions landing on the same digest (and
     # cluster executors) can fetch it
     assert stat.S_IMODE(os.stat(p1).st_mode) == 0o644
+
+
+def test_planted_zip_with_wrong_bytes_is_not_shipped(tmp_path, monkeypatch):
+    """A file under the right content-addressed name but with other
+    bytes (a shared /tmp lets anyone plant one) is never reused: the
+    genuine zip lands in a per-user 0700 directory instead."""
+    import hashlib
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    genuine = _write_pkg_zip(PKG)
+    with open(genuine, "rb") as fh:
+        want = fh.read()
+    with open(genuine, "wb") as fh:
+        fh.write(b"not the package")
+
+    shipped = _write_pkg_zip(PKG)
+    assert shipped != genuine
+    assert os.path.basename(shipped) == os.path.basename(genuine)
+    with open(shipped, "rb") as fh:
+        assert fh.read() == want
+    assert hashlib.sha256(want).hexdigest()[:12] in shipped
+    private = os.path.dirname(shipped)
+    assert stat.S_IMODE(os.stat(private).st_mode) == 0o700
+
+
+def test_reused_zip_mtime_is_refreshed(tmp_path, monkeypatch):
+    """Reusing a zip refreshes its mtime, so the 7-day sweep of another
+    process cannot delete it from under a live session."""
+    import tempfile
+    import time
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    p = _write_pkg_zip(PKG)
+    old = time.time() - 30 * 86400
+    os.utime(p, (old, old))
+    assert _write_pkg_zip(PKG) == p
+    assert os.path.getmtime(p) > time.time() - 3600
