@@ -505,58 +505,6 @@ def main() -> None:
             "speedup": round(serial / max(concurrent, 1e-6), 2),
         }
 
-        # Streaming micro-bench (r11 verdict item #8 — the 13 streaming
-        # modules previously had zero perf coverage): rows/sec through
-        # the stateful sessionize operator, END TO END under an
-        # availableNow trigger — source listing → shuffle on user_id →
-        # applyInPandasWithState → parquet sink + checkpoint commit.
-        # Each rep reprocesses the whole events fixture from a fresh
-        # checkpoint (no state carried across reps); min-of-3 absorbs
-        # the Python-worker cold start. Additions-only: a new detail
-        # block and one compact summary key.
-        try:
-            import shutil
-            import tempfile
-
-            from citus_spark.streaming.sessionize import run_sessionize
-
-            n_events = spark.table("events").count()
-            sb_tmp = tempfile.mkdtemp(prefix="citus_spark_streambench_")
-            sb_src = os.path.join(sb_tmp, "src")
-            os.makedirs(sb_src)
-            ev_path = os.path.join(sf_dir, "events.parquet")
-            if os.path.isdir(ev_path):
-                shutil.copytree(
-                    ev_path, os.path.join(sb_src, "events.parquet")
-                )
-            else:
-                shutil.copy(
-                    ev_path, os.path.join(sb_src, "events.parquet")
-                )
-            sb_samples: list[float] = []
-            for rep in range(3):
-                sb_out = os.path.join(sb_tmp, f"sessions_{rep}")
-                t0 = time.time()
-                run_sessionize(
-                    spark, sb_src, sb_out,
-                    queryName=f"bench_sessionize_{rep}",
-                )
-                sb_samples.append(time.time() - t0)
-            shutil.rmtree(sb_tmp, ignore_errors=True)
-            sb_best = min(sb_samples)
-            out["streaming_micro"] = {
-                "operator": (
-                    "sessionize"
-                    " (applyInPandasWithState, availableNow, parquet sink)"
-                ),
-                "input_rows": int(n_events),
-                "wall_sec_min": round(sb_best, 4),
-                "wall_sec_all": [round(s, 4) for s in sb_samples],
-                "rows_per_sec": int(n_events / max(sb_best, 1e-6)),
-            }
-        except Exception:
-            pass  # streaming bench is additive; never fail the bench
-
     # The driver records only the LAST ~2000 chars of stdout and parses
     # the final line as JSON — r5's single fat line (queries_median +
     # per-query duckdb + two trend blocks) grew past that window and
@@ -603,10 +551,6 @@ def main() -> None:
         )
     if "concurrent_streams" in out:
         compact["concurrent_speedup"] = out["concurrent_streams"]["speedup"]
-    if "streaming_micro" in out:
-        compact["stream_rows_per_sec"] = out["streaming_micro"][
-            "rows_per_sec"
-        ]
     compact["detail"] = "BENCH_DETAIL.json"
     line = json.dumps(compact)
     if len(line) > 1800:  # hard guard: never outgrow the tail window

@@ -22,7 +22,7 @@ joins and columnar scans, so this package contains:
 - `functions`  — PostgreSQL-semantics helpers over pyspark.sql.functions
 - `queries`    — the reference's own e2e query suite (TPC-H subset,
                  window/distinct/limit patterns) re-expressed Spark-first
-- `streaming`  — micro-batch rollup idiom (the reference's "real-time
+- `streaming`  — micro-batch steps (the reference's "real-time
                  analytics" pattern: INSERT..SELECT ON CONFLICT rollups)
 """
 

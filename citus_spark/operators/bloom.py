@@ -62,10 +62,6 @@ def bloom_build(
     )
 
 
-def bloom_merge(a: Column, b: Column) -> Column:
-    return F.array_sort(F.array_union(a, b))
-
-
 def bloom_maybe_contains(
     bloom: Column,
     key: Column,

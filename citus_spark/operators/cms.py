@@ -75,28 +75,6 @@ def cms_sketch(
     )
 
 
-def cms_merge(a: Column, b: Column) -> Column:
-    """Element-wise sum of two sparse states (same d/w)."""
-    allpos = F.array_sort(F.array_union(
-        F.transform(a, lambda s: s.pos),
-        F.transform(b, lambda s: s.pos),
-    ))
-    return F.transform(
-        allpos,
-        lambda p: F.struct(
-            p.alias("pos"),
-            (
-                F.coalesce(
-                    F.element_at(F.map_from_entries(a), p), F.lit(0)
-                )
-                + F.coalesce(
-                    F.element_at(F.map_from_entries(b), p), F.lit(0)
-                )
-            ).cast("long").alias("cnt"),
-        ),
-    )
-
-
 def cms_estimate(
     sketch: Column,
     key: Column,

@@ -52,26 +52,3 @@ def compression_stats(
         kernel,
         schema=f"id {id_type}, raw_bytes long, compressed_bytes long",
     )
-
-
-def compression_quality_filter(
-    docs: DataFrame,
-    text_col: str,
-    id_col: str = "doc_id",
-    min_ratio: float = 0.25,
-    max_ratio: float = 0.95,
-) -> DataFrame:
-    """Keep documents whose compressed/raw ratio sits in the healthy
-    band — the screening step, as one join back to the corpus."""
-    from pyspark.sql import functions as F
-
-    stats = compression_stats(docs, text_col, id_col).withColumn(
-        "ratio", F.col("compressed_bytes") / F.col("raw_bytes")
-    )
-    # EXPLICIT policy: empty/null documents (raw_bytes = 0, ratio
-    # NULL) never pass a content-quality filter
-    keep = stats.filter(
-        (F.col("raw_bytes") > 0)
-        & F.col("ratio").between(min_ratio, max_ratio)
-    ).select(F.col("id").alias(id_col))
-    return docs.join(keep, on=id_col, how="left_semi")

@@ -12,10 +12,9 @@ statistic is bit-identical under any partitioning and re-derivable by
 an independent engine (r8 oracle candidate: DuckDB replays the same
 quantized sums).
 
-Outputs are integer-exact: squared mean shift and variance ratios are
-reported in fixed-point (×10^6) computed from the exact integer sums
-via float64 ONLY in the final per-coordinate scalar ops (identical
-IEEE in any engine).
+The registry entry `embedding_drift_moments` (queries/mlops.py)
+reports those exact sums per slice; mean shift and variance ratios
+derive from them.
 """
 
 from __future__ import annotations
@@ -66,35 +65,3 @@ def _moment_sums(df: DataFrame, vec_col: str):
         s1[r["i"]] = r["sum(s1)"]
         s2[r["i"]] = r["sum(s2)"]
     return n, s1, s2
-
-
-def embedding_drift(
-    df_a: DataFrame, df_b: DataFrame, vec_col: str
-) -> dict:
-    """→ {n_a, n_b, mean_shift_sq_e6, max_coord_shift_e6,
-    max_var_ratio_e6}: squared L2 distance between slice means, the
-    worst single-coordinate mean shift, and the worst per-coordinate
-    variance ratio (max of both directions) — all in ×10^6 fixed
-    point from exact integer sums."""
-    import numpy as np
-
-    n_a, a1, a2 = _moment_sums(df_a, vec_col)
-    n_b, b1, b2 = _moment_sums(df_b, vec_col)
-    mu_a = a1.astype(np.float64) / (n_a * SCALE)
-    mu_b = b1.astype(np.float64) / (n_b * SCALE)
-    var_a = a2.astype(np.float64) / (n_a * SCALE * SCALE) - mu_a * mu_a
-    var_b = b2.astype(np.float64) / (n_b * SCALE * SCALE) - mu_b * mu_b
-    diff = mu_a - mu_b
-    eps = 1e-12
-    ratio = np.maximum(
-        (var_a + eps) / (var_b + eps), (var_b + eps) / (var_a + eps)
-    )
-    return {
-        "n_a": int(n_a),
-        "n_b": int(n_b),
-        "mean_shift_sq_e6": int(round(float((diff * diff).sum()) * 1e6)),
-        "max_coord_shift_e6": int(
-            round(float(np.abs(diff).max()) * 1e6)
-        ),
-        "max_var_ratio_e6": int(round(float(ratio.max()) * 1e6)),
-    }

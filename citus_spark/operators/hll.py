@@ -3,10 +3,9 @@
 ↔ reference hll extension: rollup tables store `hll` VALUES that are
 re-aggregated later (worker hll_add_agg → coordinator hll_union_agg,
 multi_logical_optimizer.c:1711-1760). Spark's approx_count_distinct
-answers one query but cannot persist/merge sketches across queries —
-this module provides that missing piece on the distributed_agg
-(partial/combine/final) framework: the sketch state is a register
-array column that can be written to a rollup table and unioned later.
+answers one query; this module expresses the sketch on the
+distributed_agg (partial/combine/final) framework, with a register
+array as the mergeable state and register-wise max as the merge.
 
 Standard HLL with 2^p registers, hash = the engine's portable 60-bit
 md5 hash (citus_spark.functions.hash64) computed JVM-side before the
@@ -87,40 +86,6 @@ def hll_spec(group_cols: Sequence[str], gddl: str | None = None) -> AggSpec:
         final=final,
         state_schema=f"{gddl}, registers array<long>",
         output_schema=f"{gddl}, approx_ndv double",
-    )
-
-
-def hll_sketch(df: DataFrame, group_cols: Sequence[str], value_col) -> DataFrame:
-    """Build per-group sketch STATES (group..., registers) — the
-    persistable rollup form (↔ storing hll values in rollup tables)."""
-    g = list(group_cols)
-    hashed = df.select(*g, hash64(F.col(value_col).cast("string")).alias("h"))
-    spec = hll_spec(g, group_ddl(df, g))
-
-    def partial_batches(it):
-        for pdf in it:
-            if len(pdf):
-                yield pdf.groupby(g, as_index=False, sort=False).apply(
-                    spec.partial, include_groups=True
-                ).reset_index(drop=True)
-
-    states = hashed.mapInPandas(partial_batches, schema=spec.state_schema)
-    return states.groupBy(*g).applyInPandas(spec.combine, schema=spec.state_schema)
-
-
-def hll_union(sketches: DataFrame, group_cols: Sequence[str]) -> DataFrame:
-    """Merge sketch rows across rollups (↔ hll_union_agg) → states."""
-    g = list(group_cols)
-    spec = hll_spec(g, group_ddl(sketches, g))
-    return sketches.groupBy(*g).applyInPandas(spec.combine, schema=spec.state_schema)
-
-
-def hll_estimate(sketches: DataFrame, group_cols: Sequence[str]) -> DataFrame:
-    """Finalize sketch states to cardinality estimates."""
-    g = list(group_cols)
-    spec = hll_spec(g, group_ddl(sketches, g))
-    return sketches.groupBy(*g).applyInPandas(
-        lambda pdf: spec.final(spec.combine(pdf)), schema=spec.output_schema
     )
 
 

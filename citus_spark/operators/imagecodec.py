@@ -145,14 +145,6 @@ def to_gray(img: np.ndarray) -> np.ndarray:
     return rgb @ np.array([0.299, 0.587, 0.114])
 
 
-def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resize of an (h, w, c) array."""
-    h, w = img.shape[:2]
-    ys = (np.arange(height) * h // height).clip(0, h - 1)
-    xs = (np.arange(width) * w // width).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
 def block_means_8x8(gray: np.ndarray) -> np.ndarray:
     """(h, w) → 64 cell means on the 8×8 grid (aHash downsample)."""
     h, w = gray.shape

@@ -73,17 +73,3 @@ def tag_keywords(
     return docs.withColumn(
         out_col, F.array_sort(F.array_intersect(toks, dict_col))
     )
-
-
-def keyword_doc_frequencies(
-    docs: DataFrame, text_col: str, keywords: list[str]
-) -> DataFrame:
-    """Per-keyword document frequency — the dictionary-health report
-    (dead terms, over-broad terms). One explode + one hash agg."""
-    tagged = tag_keywords(docs, text_col, keywords)
-    return (
-        tagged.select(F.explode("tags").alias("keyword"))
-        .groupBy("keyword")
-        .agg(F.count("*").alias("n_docs"))
-        .orderBy("keyword")
-    )

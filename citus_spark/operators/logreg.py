@@ -94,26 +94,6 @@ def train_logreg(
     return [float(v) for v in w]
 
 
-def score_logreg(
-    features_df: DataFrame, feature_col: str, weights: list[float]
-) -> DataFrame:
-    """Corpus-wide scoring with the trained weights — one JVM-side
-    expression (dot product via aggregate over zip), no Python."""
-    from pyspark.sql import functions as F
-
-    from citus_spark.functions import dot_fold_sql
-
-    d = len(weights) - 1
-    w_lit = "array(" + ", ".join(
-        str(float(v)) for v in weights[:d]
-    ) + ")"
-    dot = F.expr(dot_fold_sql(feature_col, w_lit))
-    z = dot + F.lit(float(weights[-1]))
-    return features_df.withColumn(
-        "score", F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-    )
-
-
 def train_logreg_reference(
     rows: list[tuple[list[float], float]],
     n_iter: int = 5,

@@ -1,12 +1,13 @@
-"""Parameterized MinHash + banded-LSH near-duplicate candidates.
+"""Parameterized MinHash signatures for near-duplicate detection.
 
 The oracle-checked registry entries (queries/dedup.py) use
 fixture-sized constants (4 minhash slices of one md5, 2 bands) so the
 DuckDB oracle can recompute them bit-for-bit. This module is the
-production-parameter path: `n_perms`/`n_bands`/`shingle_k` are
-arguments, so callers can hit real recall targets — e.g. 128 perms in
-16 bands of 8 gives P(candidate) = 1-(1-s^8)^16 ≈ 0.95 at Jaccard
-s = 0.8 (the classic S-curve).
+production-parameter path: `n_perms`/`shingle_k` are arguments, so
+callers can hit real recall targets — e.g. 128 perms in 16 bands of 8
+gives P(candidate) = 1-(1-s^8)^16 ≈ 0.95 at Jaccard s = 0.8 (the
+classic S-curve). The streaming near-dup index
+(streaming/neardup_stream.py) bands and verifies these signatures.
 
 Construction (all JVM-side expressions, no Python in the row path):
 
@@ -21,21 +22,18 @@ Construction (all JVM-side expressions, no Python in the row path):
      inside 64-bit, no overflow), with (a_i, b_i) derived
      deterministically from the permutation index via md5 — re-runs
      and retries produce identical signatures;
-  3. signature = array_min over the shingle hashes per permutation;
-  4. LSH: split the signature into `n_bands` rows of `r = k/n_bands`,
-     bucket = md5 of the band slice, self-join on (band, bucket).
+  3. signature = array_min over the shingle hashes per permutation.
 
-Scale shape: the self-join shuffles on (band, bucket) — never
-all-pairs. Expected cost O(n·k) signature work + the candidate-pair
-verification, identical to the reference-free published MinHash-LSH
-formulation (Broder; Leskovec/Rajaraman/Ullman ch. 3).
+Expected cost O(n·k) signature work, identical to the reference-free
+published MinHash-LSH formulation (Broder; Leskovec/Rajaraman/Ullman
+ch. 3).
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from citus_spark.functions import hash64
@@ -87,57 +85,3 @@ def minhash_signature(
         return F.array_min(F.transform(h31, lambda x: (a * x + b) % _P31))
 
     return F.array(*[perm_min(a, b) for a, b in _perm_params(n_perms)])
-
-
-def lsh_candidate_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_perms: int = 128,
-    n_bands: int = 16,
-    shingle_k: int = 3,
-    portable_hash: bool = False,
-) -> DataFrame:
-    """(doc_a, doc_b) candidate near-duplicate pairs via banded LSH.
-
-    `n_perms` must divide evenly into `n_bands`; rows per band
-    r = n_perms/n_bands sets the S-curve threshold ≈ (1/n_bands)^(1/r).
-    """
-    if n_perms % n_bands:
-        raise ValueError(f"n_bands={n_bands} must divide n_perms={n_perms}")
-    r = n_perms // n_bands
-
-    sig = docs.select(
-        F.col(id_col).alias("_id"),
-        minhash_signature(
-            F.col(text_col), n_perms, shingle_k, portable_hash
-        ).alias("_sig"),
-    )
-    # band rows: (id, band, bucket) — bucket is md5 of the band slice
-    banded = sig.select(
-        "_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.md5(
-                        F.concat_ws(",", F.slice(F.col("_sig"), b * r + 1, r))
-                    ).alias("bucket"),
-                ),
-            )
-        ).alias("bb"),
-    ).select("_id", "bb.band", "bb.bucket")
-    banded = banded.persist()
-
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(F.col("a._id").alias("doc_a"), F.col("b._id").alias("doc_b"))
-        .distinct()
-    )

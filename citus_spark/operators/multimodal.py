@@ -148,53 +148,6 @@ def byte_features(df: DataFrame, n_buckets: int = 8) -> DataFrame:
     return df.mapInPandas(batches, schema=out_schema)
 
 
-def resize_image(df: DataFrame, width: int, height: int, fake: bool = True) -> DataFrame:
-    """Resize → same schema with new payload. Real path: vendored PNG
-    decode → nearest-neighbor resize → PNG re-encode (undecodable
-    payloads pass through unchanged). Fake path truncates/pads bytes
-    deterministically."""
-    out_schema = "id bigint, media binary"
-
-    if not fake:
-        from citus_spark.operators.imagecodec import (
-            decode_image_bytes,
-            encode_png,
-            resize_nearest,
-        )
-
-        def real_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            def one(buf):
-                b = bytes(buf)
-                try:
-                    return encode_png(
-                        resize_nearest(decode_image_bytes(b), width, height)
-                    )
-                except Exception:  # corrupt/foreign payload → unchanged
-                    return b
-
-            for pdf in it:
-                yield pd.DataFrame(
-                    {"id": pdf["id"], "media": pdf["media"].map(one)}
-                )
-
-        return df.mapInPandas(real_batches, schema=out_schema)
-
-    target = width * height * 3
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"],
-                    "media": pdf["media"].map(
-                        lambda b: bytes(b)[:target].ljust(target, b"\0")
-                    ),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=out_schema)
-
-
 def frame_sample(df: DataFrame, every_n: int = 10, fake: bool = True) -> DataFrame:
     """Video frame sampling → one row per sampled frame.
 

@@ -85,23 +85,3 @@ def top_principal_direction(
             break
     rayleigh = float(v @ G @ v)
     return [float(x) for x in v], rayleigh
-
-
-def remove_top_direction(
-    df: DataFrame, vec_col: str, direction: list[float]
-) -> DataFrame:
-    """Project the top direction OUT of every embedding (the
-    all-but-the-top step), JVM-side: x' = x - (x·u) u."""
-    from pyspark.sql import functions as F
-
-    from citus_spark.functions import dot_fold_sql
-
-    u = ", ".join(str(float(x)) for x in direction)
-    proj = F.expr(dot_fold_sql(vec_col, f"array({u})"))
-    return df.withColumn("__proj", proj).withColumn(
-        "debiased",
-        F.expr(
-            f"zip_with({vec_col}, array({u}), "
-            "(a, b) -> CAST(a AS DOUBLE) - __proj * b)"
-        ),
-    ).drop("__proj")

@@ -211,190 +211,3 @@ def pq_topk(
         .orderBy("dist", id_col)
         .limit(k)
     )
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ — the composed index (FAISS's IVFPQ): IVF cell routing
-# bounds WHICH rows are scanned (nprobe/n_cells of the corpus), PQ
-# residual codes bound WHAT each scanned row costs (m byte lookups).
-# Residual encoding matters: vectors inside one cell share the cell
-# centroid, so quantizing x - centroid spends the codebooks on the
-# within-cell geometry instead of re-describing the centroid.
-
-
-def ivfpq_train(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_cells: int = 16,
-    m: int = 8,
-    k: int = 16,
-    iters: int = 10,
-    sample: int = 4096,
-):
-    """Train cell centroids (Lloyd's on the deterministic sample) and
-    PQ codebooks on the sample's RESIDUALS. Returns
-    (cells (n_cells, d), codebooks (m, k, d/m))."""
-    import numpy as np
-
-    rows = (
-        df.select(id_col, vec_col)
-        .orderBy(F.abs(F.hash(F.col(id_col).cast("string"))), F.col(id_col))
-        .limit(sample)
-        .collect()
-    )
-    x = np.array([r[1] for r in rows], dtype=np.float64)
-    _, first_idx = np.unique(x.round(9), axis=0, return_index=True)
-    if len(first_idx) < n_cells:
-        raise ValueError("sample has fewer distinct vectors than n_cells")
-    cells = x[np.sort(first_idx)[:n_cells]].copy()
-    for _ in range(iters):
-        d2 = ((x[:, None, :] - cells[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for c in range(n_cells):
-            member = x[assign == c]
-            if len(member):
-                cells[c] = member.mean(axis=0)
-    final_assign = (
-        ((x[:, None, :] - cells[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-    )
-    resid = x - cells[final_assign]
-    rdf = df.sparkSession.createDataFrame(
-        [(i, [float(v) for v in resid[i]]) for i in range(len(resid))],
-        f"{id_col} long, {vec_col} array<float>",
-    )
-    books = pq_train(
-        rdf, vec_col=vec_col, id_col=id_col, m=m, k=k, iters=iters,
-        sample=sample,
-    )
-    return cells, books
-
-
-def ivfpq_encode(
-    df: DataFrame,
-    cells,
-    codebooks,
-    vec_col: str = "embedding",
-    cell_col: str = "cell_id",
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """Assign each vector to its nearest cell and PQ-encode the
-    residual: one Arrow pass, no shuffle. (At a real storage layer the
-    output is then written bucketed BY cell_id, so a probe reads only
-    its cells' files.)"""
-    import numpy as np
-    import pandas as pd
-
-    m, k, dsub = codebooks.shape
-    out_cols = [c for c in df.columns] + [cell_col, code_col]
-    schema = ", ".join(
-        [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"{cell_col} int", f"{code_col} array<int>"]
-    )
-    cn2 = (cells**2).sum(axis=1)
-
-    def kernel(batches):
-        bn2 = [(codebooks[j] ** 2).sum(axis=1) for j in range(m)]
-        for pdf in batches:
-            x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            cell = (cn2[None, :] - 2.0 * (x @ cells.T)).argmin(axis=1)
-            resid = x - cells[cell]
-            codes = np.empty((len(x), m), dtype=np.int32)
-            for j in range(m):
-                sub = resid[:, j * dsub : (j + 1) * dsub]
-                codes[:, j] = (
-                    bn2[j][None, :] - 2.0 * (sub @ codebooks[j].T)
-                ).argmin(axis=1)
-            pdf = pdf.copy()
-            pdf[cell_col] = cell.astype("int32")
-            pdf[code_col] = [row.tolist() for row in codes]
-            yield pdf[out_cols]
-
-    return df.mapInPandas(kernel, schema=schema)
-
-
-def ivfpq_topk(
-    encoded: DataFrame,
-    query_vec,
-    cells,
-    codebooks,
-    nprobe: int = 2,
-    k: int = 10,
-    candidates: int = 50,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    cell_col: str = "cell_id",
-    code_col: str = "pq_code",
-) -> DataFrame:
-    """Probe the nprobe nearest cells, ADC-score their rows against
-    per-cell residual lookup tables (||q - cent_c|| folds into the
-    table, so a row still costs m gathers), global candidate cut,
-    exact rescore. The cell filter is the scan bound: only
-    ~nprobe/n_cells of the corpus is touched — at a bucketed storage
-    layer that is partition pruning, not a post-scan filter."""
-    import numpy as np
-    import pandas as pd
-
-    m, kk, dsub = codebooks.shape
-    q = np.asarray(query_vec, dtype=np.float64)
-    order = ((cells - q[None, :]) ** 2).sum(axis=1).argsort(kind="stable")
-    probed = [int(c) for c in order[:nprobe]]
-    # per probed cell: lut[j, code] = ||(q - cent)_sub_j - book_j[code]||²
-    luts = {}
-    for c in probed:
-        rq = q - cells[c]
-        luts[c] = np.stack(
-            [
-                (
-                    (codebooks[j] - rq[j * dsub : (j + 1) * dsub][None, :])
-                    ** 2
-                ).sum(axis=1)
-                for j in range(m)
-            ]
-        )
-
-    def kernel(batches):
-        for pdf in batches:
-            take = min(candidates, len(pdf))
-            if take == 0:
-                continue
-            codes = np.array(pdf[code_col].tolist(), dtype=np.int64)
-            cellv = pdf[cell_col].to_numpy()
-            adc = np.empty(len(codes), dtype=np.float64)
-            for c in probed:
-                mask = cellv == c
-                if mask.any():
-                    adc[mask] = luts[c][
-                        np.arange(m)[None, :], codes[mask]
-                    ].sum(axis=1)
-            # deterministic (adc, id) cut — same rationale as pq_topk
-            idx = np.lexsort((pdf[id_col].to_numpy(), adc))[:take]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy()[idx],
-                    "adc_dist": adc[idx],
-                    vec_col: pdf[vec_col].iloc[idx].tolist(),
-                }
-            )
-
-    surv = (
-        encoded.filter(F.col(cell_col).isin(probed))
-        .select(id_col, cell_col, code_col, vec_col)
-        .mapInPandas(
-            kernel,
-            schema=f"{id_col} long, adc_dist double, {vec_col} array<float>",
-        )
-        .orderBy("adc_dist", id_col)
-        .limit(candidates)
-    )
-    qlit = F.array(*[F.lit(float(v)) for v in q])
-    diff = F.zip_with(F.col(vec_col), qlit, lambda a, b: a - b)
-    dist = F.aggregate(
-        diff, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x
-    )
-    return (
-        surv.withColumn("dist", dist)
-        .select(id_col, "adc_dist", "dist")
-        .orderBy("dist", id_col)
-        .limit(k)
-    )

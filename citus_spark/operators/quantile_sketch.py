@@ -96,47 +96,6 @@ def _hashed(df: DataFrame, group_cols: Sequence[str], value_col: str, id_col: st
     )
 
 
-def quantile_sketch(
-    df: DataFrame, group_cols: Sequence[str], value_col: str, id_col: str
-) -> DataFrame:
-    """Build persistable sketch states (group..., hs, vs)."""
-    g = list(group_cols)
-    spec = quantile_sketch_spec(g, gddl=group_ddl(df, g))
-    src = _hashed(df, g, value_col, id_col)
-
-    def partial_batches(it):
-        for pdf in it:
-            if len(pdf):
-                yield pdf.groupby(g, as_index=False, sort=False).apply(
-                    spec.partial, include_groups=True
-                ).reset_index(drop=True)
-
-    states = src.mapInPandas(partial_batches, schema=spec.state_schema)
-    return states.groupBy(*g).applyInPandas(spec.combine, schema=spec.state_schema)
-
-
-def quantile_union(sketches: DataFrame, group_cols: Sequence[str]) -> DataFrame:
-    spec = quantile_sketch_spec(
-        list(group_cols), gddl=group_ddl(sketches, group_cols)
-    )
-    return sketches.groupBy(*group_cols).applyInPandas(
-        spec.combine, schema=spec.state_schema
-    )
-
-
-def quantile_estimate(
-    sketches: DataFrame,
-    group_cols: Sequence[str],
-    quantiles: Sequence[float] = (0.5, 0.9, 0.99),
-) -> DataFrame:
-    spec = quantile_sketch_spec(
-        list(group_cols), quantiles, gddl=group_ddl(sketches, group_cols)
-    )
-    return sketches.groupBy(*group_cols).applyInPandas(
-        lambda pdf: spec.final(spec.combine(pdf)), schema=spec.output_schema
-    )
-
-
 def approx_quantiles(
     df: DataFrame,
     group_cols: Sequence[str],

@@ -165,53 +165,6 @@ def tdigest_spec(
     )
 
 
-def tdigest_sketch(
-    df: DataFrame,
-    group_cols: Sequence[str],
-    value_col: str,
-    delta: float = DELTA,
-) -> DataFrame:
-    """Build persistable digest states (group..., means, ws, vmin,
-    vmax) — the rollup-table form that re-aggregates later."""
-    g = list(group_cols)
-    spec = tdigest_spec(g, "v", delta=delta, gddl=group_ddl(df, g))
-    src = df.select(*g, F.col(value_col).cast("double").alias("v"))
-
-    def partial_batches(it):
-        for pdf in it:
-            if len(pdf):
-                yield pdf.groupby(g, as_index=False, sort=False).apply(
-                    spec.partial, include_groups=True
-                ).reset_index(drop=True)
-
-    states = src.mapInPandas(partial_batches, schema=spec.state_schema)
-    return states.groupBy(*g).applyInPandas(spec.combine, schema=spec.state_schema)
-
-
-def tdigest_union(sketches: DataFrame, group_cols: Sequence[str]) -> DataFrame:
-    """Merge digest states by group (↔ coordinator tdigest merge)."""
-    spec = tdigest_spec(
-        list(group_cols), gddl=group_ddl(sketches, group_cols)
-    )
-    return sketches.groupBy(*group_cols).applyInPandas(
-        spec.combine, schema=spec.state_schema
-    )
-
-
-def tdigest_estimate(
-    sketches: DataFrame,
-    group_cols: Sequence[str],
-    quantiles: Sequence[float] = (0.5, 0.9, 0.99, 0.999),
-) -> DataFrame:
-    spec = tdigest_spec(
-        list(group_cols), quantiles=quantiles,
-        gddl=group_ddl(sketches, group_cols),
-    )
-    return sketches.groupBy(*group_cols).applyInPandas(
-        lambda pdf: spec.final(spec.combine(pdf)), schema=spec.output_schema
-    )
-
-
 def approx_quantiles_tdigest(
     df: DataFrame,
     group_cols: Sequence[str],

@@ -58,13 +58,6 @@ def theta_sketch(
     )
 
 
-def theta_union(sketch_a: Column, sketch_b: Column, k: int = DEFAULT_K) -> Column:
-    """Merged state: distinct-union, keep the k smallest."""
-    return F.slice(
-        F.array_sort(F.array_union(sketch_a, sketch_b)), 1, k
-    )
-
-
 def theta_ndv(sketch: Column, k: int = DEFAULT_K) -> Column:
     """Distinct-count estimate from a state (exact below k)."""
     n = F.size(sketch)

@@ -80,48 +80,6 @@ def distributed_agg(
     )
 
 
-# ---------------------------------------------------------------------------
-# Example aggregate: exact weighted mean with decomposable state
-# (sum_wx, sum_w) — the shape of every algebraic aggregate the
-# reference distributes (avg → sum+count decomposition,
-# MasterAggregateExpression).
-def weighted_mean_spec(
-    group_cols: Sequence[str],
-    value_col: str,
-    weight_col: str,
-    gddl: str | None = None,
-) -> AggSpec:
-    """`gddl`: group-column DDL from ``group_ddl(df, group_cols)``;
-    defaults to all-string keys."""
-    g = list(group_cols)
-    gddl = gddl or ", ".join(f"{c} string" for c in g)
-
-    def partial(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf.iloc[:1][g].copy()
-        out["sum_wx"] = (pdf[value_col] * pdf[weight_col]).sum()
-        out["sum_w"] = pdf[weight_col].sum()
-        return out
-
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf.iloc[:1][g].copy()
-        out["sum_wx"] = pdf["sum_wx"].sum()
-        out["sum_w"] = pdf["sum_w"].sum()
-        return out
-
-    def final(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.copy()
-        pdf["weighted_mean"] = pdf["sum_wx"] / pdf["sum_w"]
-        return pdf[g + ["weighted_mean"]]
-
-    return AggSpec(
-        partial=partial,
-        combine=combine,
-        final=final,
-        state_schema=f"{gddl}, sum_wx double, sum_w double",
-        output_schema=f"{gddl}, weighted_mean double",
-    )
-
-
 # Exact median — a *holistic* aggregate (state = all values). The
 # reference would pull rows to the coordinator for such aggregates
 # (AGGREGATE_CUSTOM_ROW_GATHER); here the state is the per-partition

@@ -59,30 +59,6 @@ def bound_predicate_sql(
     raise ValueError(f"unknown partition bound kind {kind!r}")
 
 
-def bound_predicate_duck(
-    col: str, bound: dict, sibling_bounds: list[dict] | None = None
-) -> str:
-    """The same predicate in DuckDB dialect (oracle replay)."""
-    from citus_spark.functions import hash64_duck
-
-    kind = bound["kind"]
-    if kind == "hash":
-        h = hash64_duck(f"coalesce(CAST({col} AS VARCHAR), '')")
-        m = bound["modulus"]
-        return f"((({h}) % {m} + {m}) % {m} = {bound['remainder']})"
-    if kind == "default":
-        others = [
-            bound_predicate_duck(col, b)
-            for b in (sibling_bounds or [])
-            if b["kind"] != "default"
-        ]
-        if not others:
-            return "(true)"
-        return f"(NOT coalesce(({' OR '.join(others)}), false))"
-    # range/list forms are dialect-shared
-    return bound_predicate_sql(col, bound, sibling_bounds)
-
-
 def validate_new_bound(spark, parent_entry, bound: dict) -> None:
     """Reject bounds PG would reject: overlapping ranges, duplicate
     list values, duplicate hash remainders / mixed moduli, a second

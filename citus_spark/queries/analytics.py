@@ -1478,11 +1478,10 @@ ORDER BY user_id, valid_from, event_id
 
 
 # ---------------------------------------------------------------------------
-# Interval join (batch form of streaming/interval_join.py — same
-# operator code drives both; the streaming variant's batch-equivalence
-# is asserted in tests/test_streaming_interval_join.py). Time-range
-# theta join: at scale both sides hash-shuffle on user_id and the
-# range predicate filters within co-located partitions.
+# Interval join (batch form of streaming/interval_join.py — the same
+# operator code would drive a stream). Time-range theta join: at
+# scale both sides hash-shuffle on user_id and the range predicate
+# filters within co-located partitions.
 def interval_join_attribution(spark, sf_dir):
     from pyspark.sql import functions as F
 
@@ -4046,8 +4045,8 @@ ORDER BY keyval
 
 # ---------------------------------------------------------------------------
 # Streaming top-N rollup, batch-driven (↔ the reference's topn-JSONB
-# rollup pattern; streaming/topn_rollup.py runs the same step under
-# foreachBatch — batch≡stream equivalence is pytest-checked). Two
+# rollup pattern; streaming/topn_rollup.apply_topn_batch is the step a
+# foreachBatch sink runs per micro-batch). Two
 # event_id-parity waves merge into a stored sketch-state table; the
 # finalized extraction is EXACT because event_type cardinality stays
 # within the sketch's slack*k capacity, so DuckDB re-derives the

@@ -187,8 +187,7 @@ register_split(
 # operator's distributed pass verbatim: per-coordinate int64 moment
 # sums (quantum 2^10), which are exact under any partitioning and
 # SQL-replayable, plus the integer cross-difference of slice means
-# (s1_a·n_b − s1_b·n_a — exact drift signal with no division). The
-# derived float metrics (round-bearing) are pinned by tests/test_drift.py.
+# (s1_a·n_b − s1_b·n_a — exact drift signal with no division).
 def embedding_drift_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from citus_spark.operators.drift import _moment_sums
 

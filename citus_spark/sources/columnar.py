@@ -1,5 +1,5 @@
-"""Columnar storage options + chunk metadata — the write-side half of
-the reference's columnar access method.
+"""Columnar storage options — the write-side half of the reference's
+columnar access method.
 
 ↔ reference columnar table options (columnar/columnar_tableam.c,
 alter_columnar_table_set() in columnar/columnar_customscan.c /
@@ -7,9 +7,8 @@ columnar.sql): `compression`, `compression_level`,
 `chunk_group_row_limit` (default 10k rows — the min/max-skipping
 granule), `stripe_row_limit` (default 150k rows — the append/rewrite
 unit). The scan-side analog (chunk skipping from min/max metadata) is
-already plan-gated in tests/test_plan_quality.py and measured in
-sources/zorder.py; this module makes the WRITE side configurable and
-the chunk metadata inspectable.
+plan-gated in tests/test_plan_quality.py; this module makes the WRITE
+side configurable.
 
 Mapping onto parquet, unit-for-unit:
 
@@ -35,7 +34,7 @@ layout choice persists with the rest of the table's physical metadata
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 # ↔ reference defaults (columnar.sql / columnar_tableam.c GUCs)
 COLUMNAR_DEFAULTS = {
@@ -87,56 +86,3 @@ def write_columnar(
             spark.conf.set(level_conf, old_level)
         else:
             spark.conf.unset(level_conf)
-
-
-def chunk_stats(spark: SparkSession, path: str, columns: list[str] | None = None):
-    """Chunk-group metadata view (↔ the reference's
-    `columnar.chunk` catalog: per-chunk min/max/row-count used for
-    chunk skipping): one row per (file, row_group, column) with rows,
-    bytes, and the min/max the scan prunes on. Footer-only reads —
-    no data pages are touched, same as the reference reading its
-    metadata tables."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    files = (
-        [path]
-        if os.path.isfile(path)
-        else [
-            os.path.join(root, f)
-            for root, _d, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
-    )
-    rows = []
-    for f in sorted(files):
-        meta = pq.read_metadata(f)
-        schema_names = [meta.schema.column(i).name for i in range(meta.num_columns)]
-        for rg in range(meta.num_row_groups):
-            g = meta.row_group(rg)
-            for ci in range(g.num_columns):
-                name = schema_names[ci]
-                if columns is not None and name not in columns:
-                    continue
-                col = g.column(ci)
-                st = col.statistics
-                rows.append(
-                    (
-                        os.path.basename(f),
-                        rg,
-                        name,
-                        int(g.num_rows),
-                        int(col.total_compressed_size),
-                        str(col.compression),
-                        None if st is None else str(st.min),
-                        None if st is None else str(st.max),
-                    )
-                )
-    return spark.createDataFrame(
-        rows,
-        "file string, chunk_group int, column string, chunk_rows long, "
-        "compressed_bytes long, compression string, min_value string, "
-        "max_value string",
-    )

@@ -2,23 +2,12 @@
 
 Reference mapping (SURVEY.md §2.1, §2.8, §3.3):
 
-- ``copy_from_csv``  ↔ COPY table FROM: the reference parses the
-  stream on the coordinator and routes each tuple to its shard by
-  hash (multi_copy.c:1878 CreateCitusCopyDestReceiver, :2258
-  CitusSendTupleToPlacements). Spark-first: the *read* is already
-  parallel, and the routing is one `repartition(buckets, dist_col)`
-  — the shuffle IS the tuple router.
 - ``write_distributed`` / bucketed tables ↔ hash sharding
   (shardinterval_utils.c:415 uniform hash ranges). A bucketed
   saveAsTable persists HashPartitioning in the catalog, so later
   dist-col joins/aggregations satisfy EnsureRequirements with no
   Exchange — exactly the reference's co-located pushdown join
   (LOCAL_PARTITION_JOIN, multi_join_order.h:34).
-- ``insert_select`` ↔ INSERT..SELECT three strategies
-  (insert_select_planner.c:219): co-located pushdown / repartition /
-  pull-to-coordinator collapse into "does the write need a shuffle",
-  which Catalyst inserts (or not) automatically.
-- ``copy_to_csv`` ↔ COPY (query) TO.
 """
 
 from __future__ import annotations
@@ -27,40 +16,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from citus_spark.catalog import DEFAULT_SHARD_COUNT
-
-
-def copy_from_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    dist_col: str | None = None,
-    buckets: int = DEFAULT_SHARD_COUNT,
-    header: bool = True,
-    out_path: str | None = None,
-) -> DataFrame:
-    """COPY FROM: parallel CSV parse → hash-route → (optionally)
-    persist as parquet. Schema should be explicit in production
-    (inference re-reads the file)."""
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    df = reader.csv(path)
-    if dist_col is not None:
-        df = df.repartition(buckets, F.col(dist_col))
-    if out_path is not None:
-        df.write.mode("overwrite").parquet(out_path)
-        df = spark.read.parquet(out_path)
-    return df
-
-
-def copy_to_csv(df: DataFrame, path: str, header: bool = True) -> None:
-    """COPY (query) TO — distributed CSV write."""
-    df.write.mode("overwrite").option("header", str(header).lower()).csv(path)
 
 
 def write_distributed(
@@ -89,22 +46,6 @@ def write_distributed(
     writer = df.write.mode("overwrite").bucketBy(buckets, dist_col)
     writer = writer.sortBy(sort_by or dist_col)
     writer.format("parquet").saveAsTable(name)
-
-
-def insert_select(
-    spark: SparkSession,
-    target_table: str,
-    select_df: DataFrame,
-    dist_col: str | None = None,
-    buckets: int = DEFAULT_SHARD_COUNT,
-) -> None:
-    """INSERT INTO target SELECT ... — append path. If the target is a
-    bucketed table Spark routes rows to buckets during the write (the
-    reference's 'repartition' strategy); if `select_df` is already
-    partitioned compatibly the shuffle is elided (the 'co-located'
-    strategy). No pull-to-coordinator strategy exists — the driver
-    never materializes rows."""
-    select_df.write.mode("append").insertInto(target_table)
 
 
 def merge_into(

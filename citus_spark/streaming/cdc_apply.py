@@ -9,8 +9,8 @@ real pipeline needs: given a Debezium-shaped change feed
 
     (op string ∈ insert|update|delete, seq bigint, key..., payload...)
 
-maintain the current-state table incrementally with Structured
-Streaming.
+maintain the current-state table incrementally (`apply_changes`, one
+call per micro-batch).
 
 Ordering/consistency model (the part worth getting right at scale):
 
@@ -21,8 +21,8 @@ Ordering/consistency model (the part worth getting right at scale):
   newer state row);
 - deletes are retained as TOMBSTONES (op='delete' rows with their
   seq) so an out-of-order earlier insert cannot resurrect a deleted
-  key; `read_current` filters them. Production GC would drop
-  tombstones older than the feed's replay horizon;
+  key; a reader of the current table filters them. Production GC
+  would drop tombstones older than the feed's replay horizon;
 - each micro-batch apply is ONE shuffle: union(state, batch-latest) →
   per-key argmax by seq. At scale both sides are bucketed by key, so
   the merge is co-located and O(state + delta) per batch.
@@ -30,9 +30,7 @@ Ordering/consistency model (the part worth getting right at scale):
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -100,98 +98,3 @@ def apply_changes(
     new state INCLUDING tombstones."""
     merged = changes if state is None else state.unionByName(changes)
     return _latest_per_key(merged, keys)
-
-
-def read_current(spark: SparkSession, state_path: str) -> DataFrame:
-    """The user-facing current table: tombstones filtered, CDC
-    bookkeeping columns dropped."""
-    return (
-        spark.read.parquet(state_path)
-        .filter(F.col("op") != "delete")
-        .drop("op", "seq")
-    )
-
-
-def _drive_apply(
-    spark: SparkSession,
-    changes,
-    state_path: str,
-    keys: list[str],
-    queryName: str,
-) -> None:
-    """Shared micro-batch driver: latest-per-key delta → apply into
-    the state table via a tmp-dir two-step overwrite. Both feed
-    shapes (flat parquet rows, decoded envelopes) run through this
-    one swap protocol, so a fix to it fixes every feed."""
-    from citus_spark.queries import _ship_package
-
-    _ship_package(spark)
-
-    def upsert(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        delta = _latest_per_key(batch, keys)
-        old = (
-            spark.read.parquet(state_path)
-            if os.path.exists(state_path)
-            else None
-        )
-        new_state = apply_changes(old, delta, keys)
-        tmp = state_path + ".tmp"
-        new_state.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(state_path)
-        import shutil
-
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    q = (
-        changes.writeStream.foreachBatch(upsert)
-        .queryName(queryName)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", state_path + ".ckpt." + queryName)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_envelope_apply_to_table(
-    spark: SparkSession,
-    feed_dir: str,
-    state_path: str,
-    key_fields: str,
-    after_fields: str,
-    keys: list[str],
-    queryName: str = "cdc_envelope_apply",
-) -> None:
-    """Tail a Debezium-envelope text feed (one JSON envelope per line
-    — the shape a Kafka-file bridge or the reference's cdc_decoder.c
-    consumer would drop) to completion: streaming from_json decode
-    (parse_debezium) → per-micro-batch latest-state apply. Same
-    idempotence/ordering contract as run_apply_to_table."""
-    stream = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", 1)
-        .load(feed_dir)
-    )
-    changes = parse_debezium(stream, "value", key_fields, after_fields)
-    _drive_apply(spark, changes, state_path, keys, queryName)
-
-
-def run_apply_to_table(
-    spark: SparkSession,
-    feed_dir: str,
-    state_path: str,
-    keys: list[str],
-    queryName: str = "cdc_apply",
-) -> None:
-    """Drive the change feed (parquet directory, Debezium-shaped rows)
-    to completion, maintaining `state_path` incrementally. Idempotent:
-    replaying the same feed yields the identical state (per-key argmax
-    is insensitive to duplication and order)."""
-    schema = spark.read.parquet(feed_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(feed_dir)
-    )
-    _drive_apply(spark, stream, state_path, keys, queryName)

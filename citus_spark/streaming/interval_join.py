@@ -69,25 +69,3 @@ def attribute_purchases(
             F.col("p_ts").cast("double") - F.col("v_ts").cast("double")
         ).alias("gap_seconds"),
     )
-
-
-def run_attribution(spark, src_dir: str, out_path: str) -> None:
-    """Drive the stream-stream join over the directory's current
-    contents (availableNow) into parquet. Both legs read the same
-    event source and filter to their type — at production scale these
-    would be two Kafka topics; the join plan is identical."""
-    from citus_spark.streaming.rollup import read_event_stream
-
-    ev = read_event_stream(spark, src_dir)
-    views = ev.filter(F.col("event_type") == "view")
-    purchases = ev.filter(F.col("event_type") == "purchase")
-    out = attribute_purchases(views, purchases)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", out_path + ".ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -5,8 +5,8 @@ this extends it the same way the other streaming modules do).
 
 Shape: the index is ONE append-only parquet table partitioned by the
 coarse cell (`centroid_id=<k>/`), so a probe reads only its cells'
-directories — partition pruning is the nprobe. Each micro-batch, via
-``foreachBatch``:
+directories — partition pruning is the nprobe. Each micro-batch
+(``apply_ivf_batch``, the body of a ``foreachBatch`` sink):
 
 1. assigns arriving vectors to their nearest fixed centroid with the
    SAME sequential-double-fold cosine the batch path uses (JVM-side,
@@ -14,9 +14,9 @@ directories — partition pruning is the nprobe. Each micro-batch, via
    row-for-row);
 2. appends (vec_id, embedding, centroid_id) under the cell partition.
 
-Queries against the live index run the batch ivf-topk plan: pick the
-query's nprobe nearest centroids, scan ONLY those partitions, exact
-re-score inside. State posture at scale: the index is a DISK table —
+A probe of the index runs the batch ivf-topk plan: pick the query's
+nprobe nearest centroids, scan ONLY those partitions, exact re-score
+inside. State posture at scale: the index is a DISK table —
 no Spark state store, unbounded stream life; cells compact
 periodically (sources/ingest.compact_table) like any hot-append
 table. Centroids stay FIXED between rebuilds, exactly how IVF serves
@@ -92,72 +92,3 @@ def apply_ivf_batch(
 
 def read_index(spark: SparkSession, index_path: str) -> DataFrame:
     return spark.read.parquet(index_path)
-
-
-def ivf_topk_on_index(
-    spark: SparkSession,
-    index_path: str,
-    centroids: DataFrame,
-    query_vec: list[float],
-    k: int = 3,
-    nprobe: int = 2,
-) -> DataFrame:
-    """Probe the live index: nprobe nearest cells by centroid cosine,
-    then exact cosine inside only those partitions (partition pruning
-    does the cell restriction)."""
-    qlit = "array(" + ", ".join(
-        f"CAST({float(x)} AS DOUBLE)" for x in query_vec
-    ) + ")"
-    cents = centroids.select(
-        "centroid_id",
-        F.expr(
-            f"{dot_fold_sql(qlit, 'cv')} / "
-            f"(sqrt({dot_fold_sql(qlit, qlit)}) * "
-            f"sqrt({dot_fold_sql('cv', 'cv')}))"
-        ).alias("ccos"),
-    ).orderBy(F.desc("ccos"), "centroid_id").limit(nprobe)
-    probe_cells = [r.centroid_id for r in cents.collect()]
-    idx = read_index(spark, index_path).filter(
-        F.col("centroid_id").isin(probe_cells)
-    )
-    dot = F.expr(dot_fold_sql(qlit, "embedding"))
-    nrm = F.sqrt(F.expr(dot_fold_sql("embedding", "embedding")))
-    qn = F.sqrt(F.expr(dot_fold_sql(qlit, qlit)))
-    return (
-        idx.select(
-            "vec_id", (dot / (qn * nrm)).alias("cosine"), "centroid_id"
-        )
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
-
-
-def run_ivf_stream_to_index(
-    spark: SparkSession,
-    src_dir: str,
-    centroids: DataFrame,
-    index_path: str,
-    queryName: str = "ivf_stream_index",
-    checkpoint: str | None = None,
-) -> None:
-    """Structured-Streaming driver: stream embedding parquet drops
-    into the live index. The checkpoint (default: a sibling of the
-    index) is what makes re-invocation INCREMENTAL — without it every
-    run would re-ingest the whole source and append duplicate rows."""
-    schema = spark.read.parquet(src_dir).schema
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-
-    def upsert(batch: DataFrame, epoch_id: int) -> None:
-        apply_ivf_batch(batch.sparkSession, batch, centroids, index_path)
-
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(upsert)
-        .option(
-            "checkpointLocation", checkpoint or index_path + ".ckpt"
-        )
-        .queryName(queryName)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -6,7 +6,8 @@ streaming modules do).
 
 Shape: the LSH index lives as two append-only parquet tables — band
 rows (doc_id, band, bucket) and signatures (doc_id, sig) — and each
-micro-batch, via ``foreachBatch``:
+micro-batch step (``apply_neardup_batch``, the body of a
+``foreachBatch`` sink):
 
 1. computes band rows + signatures for the arriving documents
    (operators/minhash.py — the SAME expressions as the batch path, so
@@ -191,35 +192,3 @@ def apply_neardup_batch(
     bands.write.mode("append").parquet(bands_path)
     sig.write.mode("append").parquet(sigs_path)
     return flagged
-
-
-def run_neardup_to_table(
-    spark: SparkSession,
-    src_dir: str,
-    index_dir: str,
-    out_path: str,
-    queryName: str = "doc_neardup",
-) -> None:
-    """Drive the near-dup stream over current directory contents
-    (micro-batch, availableNow) into an append-only parquet sink."""
-    raw = (
-        spark.readStream.schema(
-            "doc_id bigint, text string, lang string, source string, "
-            "n_chars bigint"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def _step(batch: DataFrame, epoch_id: int) -> None:
-        out = apply_neardup_batch(spark, batch, index_dir)
-        out.write.mode("append").parquet(out_path)
-
-    q = (
-        raw.writeStream.foreachBatch(_step)
-        .option("checkpointLocation", out_path + ".ckpt")
-        .queryName(queryName)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from citus_spark.operators.topn import topn_extract, topn_map, topn_union
-from citus_spark.streaming.rollup import read_event_stream
 
 ROLLUP_KEYS = ["window_start"]
 K = 3
@@ -78,28 +77,6 @@ def apply_topn_batch(
         os.rename(state_path, old)
     os.rename(tmp, state_path)
     shutil.rmtree(old, ignore_errors=True)
-
-
-def run_topn_rollup_to_table(
-    spark: SparkSession,
-    src_dir: str,
-    state_path: str,
-    window: str = "1 hour",
-    queryName: str = "events_topn_rollup",
-) -> None:
-    events = read_event_stream(spark, src_dir)
-
-    def upsert(batch: DataFrame, epoch_id: int) -> None:
-        apply_topn_batch(batch.sparkSession, batch, state_path, window)
-
-    q = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(upsert)
-        .queryName(queryName)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def read_topn_rollup(spark: SparkSession, state_path: str) -> DataFrame:

@@ -1,31 +1,10 @@
 """Count-min sketch + bloom filter columns (operators/cms.py,
-operators/bloom.py): merge-of-parts == one-shot build (the
-re-aggregatable-state contract the hll/theta operators established),
-one-sided estimate guarantees, and no false negatives."""
+operators/bloom.py): one-sided estimate guarantees and no false
+negatives."""
 
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
-
-
-def test_cms_merge_equals_full(spark):
-    from citus_spark.operators.cms import cms_estimate, cms_merge, cms_sketch
-
-    ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").select("user_id")
-    half_a = ev.filter(F.col("user_id") % 2 == 0)
-    half_b = ev.filter(F.col("user_id") % 2 == 1)
-    full = cms_sketch(ev, [], "user_id").collect()[0].sketch
-    sa = cms_sketch(half_a, [], "user_id")
-    sb = cms_sketch(half_b, [], "user_id")
-    merged = (
-        sa.crossJoin(sb.withColumnRenamed("sketch", "sketch_b"))
-        .select(cms_merge(F.col("sketch"), F.col("sketch_b")).alias("m"))
-        .collect()[0]
-        .m
-    )
-    assert [(s.pos, s.cnt) for s in merged] == [
-        (s.pos, s.cnt) for s in full
-    ]
 
 
 def test_cms_estimates_upper_bound_all_users(spark):
@@ -42,26 +21,10 @@ def test_cms_estimates_upper_bound_all_users(spark):
     assert bad == 0  # CMS never underestimates
 
 
-def test_bloom_merge_and_no_false_negatives(spark):
-    from citus_spark.operators.bloom import (
-        bloom_build,
-        bloom_maybe_contains,
-        bloom_merge,
-    )
+def test_bloom_no_false_negatives(spark):
+    from citus_spark.operators.bloom import bloom_build, bloom_maybe_contains
 
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").select("user_id")
-    half_a = ev.filter(F.col("user_id") % 2 == 0)
-    half_b = ev.filter(F.col("user_id") % 2 == 1)
-    full = bloom_build(ev, [], "user_id").collect()[0].bloom
-    sa = bloom_build(half_a, [], "user_id")
-    sb = bloom_build(half_b, [], "user_id")
-    merged = (
-        sa.crossJoin(sb.withColumnRenamed("bloom", "bloom_b"))
-        .select(bloom_merge(F.col("bloom"), F.col("bloom_b")).alias("m"))
-        .collect()[0]
-        .m
-    )
-    assert merged == full
     # every real member answers maybe=TRUE
     blooms = bloom_build(ev, [], "user_id")
     misses = (

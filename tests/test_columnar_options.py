@@ -1,11 +1,12 @@
 """Columnar storage options (sources/columnar.py ↔ reference
 alter_columnar_table_set / columnar.chunk metadata): the options must
 actually change the written layout — codec in the file footers, rows
-per file bounded by stripe_row_limit — and chunk_stats must expose the
-min/max metadata chunk skipping prunes on."""
+per file bounded by stripe_row_limit."""
 
+import glob
+
+import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
 
@@ -14,48 +15,49 @@ def _orders(spark):
     return spark.read.parquet(f"{SF_SMALL}/orders.parquet")
 
 
+def _footers(path):
+    """{file: [(rows, codec of the first column) per row group]}, read
+    from the parquet footers under `path`."""
+    out = {}
+    for f in glob.glob(f"{path}/**/*.parquet", recursive=True):
+        meta = pq.read_metadata(f)
+        out[f] = [
+            (meta.row_group(i).num_rows, meta.row_group(i).column(0).compression)
+            for i in range(meta.num_row_groups)
+        ]
+    return out
+
+
+def _codecs(path):
+    return {c for groups in _footers(path).values() for _, c in groups}
+
+
 def test_compression_codec_reaches_the_footers(spark, tmp_path):
-    from citus_spark.sources.columnar import chunk_stats, write_columnar
+    from citus_spark.sources.columnar import write_columnar
 
     path = str(tmp_path / "gz")
     write_columnar(_orders(spark), path, {"compression": "gzip"})
-    stats = chunk_stats(spark, path, columns=["o_orderkey"]).collect()
-    assert stats and all(r.compression == "GZIP" for r in stats)
+    assert _codecs(path) == {"GZIP"}
 
     path2 = str(tmp_path / "zstd")
     write_columnar(_orders(spark), path2, {"compression_level": 9})
-    stats2 = chunk_stats(spark, path2, columns=["o_orderkey"]).collect()
-    assert stats2 and all(r.compression == "ZSTD" for r in stats2)
+    assert _codecs(path2) == {"ZSTD"}
 
 
 def test_stripe_row_limit_bounds_rows_per_file(spark, tmp_path):
-    from citus_spark.sources.columnar import chunk_stats, write_columnar
+    from citus_spark.sources.columnar import write_columnar
 
     df = _orders(spark).coalesce(1)
     n = df.count()
     limit = max(1, n // 4)
     path = str(tmp_path / "stripes")
     write_columnar(df, path, {"stripe_row_limit": limit})
-    per_file = {}
-    for r in chunk_stats(spark, path, columns=["o_orderkey"]).collect():
-        per_file[r.file] = per_file.get(r.file, 0) + r.chunk_rows
+    per_file = {
+        f: sum(rows for rows, _ in groups) for f, groups in _footers(path).items()
+    }
     assert sum(per_file.values()) == n
     assert len(per_file) >= 4
     assert all(v <= limit for v in per_file.values())
-
-
-def test_chunk_stats_minmax_match_data(spark, tmp_path):
-    from citus_spark.sources.columnar import chunk_stats, write_columnar
-
-    path = str(tmp_path / "mm")
-    write_columnar(_orders(spark), path)
-    stats = chunk_stats(spark, path, columns=["o_orderkey"]).collect()
-    lo = min(int(r.min_value) for r in stats)
-    hi = max(int(r.max_value) for r in stats)
-    actual = _orders(spark).agg(
-        F.min("o_orderkey").alias("lo"), F.max("o_orderkey").alias("hi")
-    ).collect()[0]
-    assert (lo, hi) == (actual.lo, actual.hi)
 
 
 def test_alter_columnar_table_set_catalog_and_sql_route(spark):
@@ -101,7 +103,6 @@ def test_options_persist_with_catalog(spark, tmp_path):
 
 def test_alter_table_set_access_method_materializes_options(spark, tmp_path):
     from citus_spark.session import DistributedSession
-    from citus_spark.sources.columnar import chunk_stats
 
     sess = DistributedSession(spark)
     sess.create_distributed_table(
@@ -115,8 +116,7 @@ def test_alter_table_set_access_method_materializes_options(spark, tmp_path):
     sess.sql("SELECT alter_table_set_access_method('orders_am', 'columnar')")
     got_path = sess.catalog.get("orders_am").path
     # options reached the written files
-    stats = chunk_stats(spark, got_path, columns=["o_orderkey"]).collect()
-    assert stats and all(r.compression == "GZIP" for r in stats)
+    assert _codecs(got_path) == {"GZIP"}
     # relation unchanged, view now reads the materialized layout
     assert spark.table("orders_am").count() == n_before
     # the API form with an explicit path

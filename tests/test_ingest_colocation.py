@@ -1,4 +1,4 @@
-"""Ingest paths + the colocation contract: bucketed dist-col joins and
+"""Bucketed writes + the colocation contract: bucketed dist-col joins and
 aggregations must produce NO shuffle exchange (the Spark realization of
 the reference's co-located pushdown join / group-by-dist-col pushdown,
 SURVEY.md §2.3-2.4)."""
@@ -8,13 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from citus_spark.sources.ingest import (
-    copy_from_csv,
-    copy_to_csv,
-    insert_select,
-    n_exchanges,
-    write_distributed,
-)
+from citus_spark.sources.ingest import n_exchanges, write_distributed
 from tests.conftest import SF_SMALL
 
 
@@ -22,25 +16,6 @@ from tests.conftest import SF_SMALL
 def warehouse(spark, tmp_path_factory):
     # bucketed tables land in spark-warehouse; isolate per test run
     return tmp_path_factory.mktemp("wh")
-
-
-def test_copy_roundtrip(spark, tmp_path):
-    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
-    csv_dir = str(tmp_path / "orders_csv")
-    copy_to_csv(orders, csv_dir)
-    back = copy_from_csv(
-        spark,
-        csv_dir,
-        schema="o_orderkey bigint, o_custkey bigint, o_orderstatus string, "
-        "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-        dist_col="o_orderkey",
-        buckets=8,
-    )
-    assert back.count() == orders.count()
-    # hash-routing preserved row content
-    a = orders.agg(F.sum("o_orderkey"), F.sum("o_totalprice")).collect()[0]
-    b = back.agg(F.sum("o_orderkey"), F.sum("o_totalprice")).collect()[0]
-    assert a[0] == b[0] and abs(a[1] - b[1]) < 1e-6
 
 
 def test_colocated_join_has_no_exchange(spark):
@@ -94,16 +69,6 @@ def test_groupby_dist_col_no_exchange_on_bucketed(spark):
     )
     assert n_exchanges(g) == 0
     assert g.count() > 0
-
-
-def test_insert_select_append(spark):
-    orders = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
-    write_distributed(orders, "t_orders_ins", "o_orderkey", buckets=8)
-    before = spark.table("t_orders_ins").count()
-    extra = orders.filter(F.col("o_totalprice") > 400000)
-    insert_select(spark, "t_orders_ins", extra)
-    after = spark.table("t_orders_ins").count()
-    assert after == before + extra.count()
 
 
 def test_reference_table_join_broadcasts(spark):

@@ -2,7 +2,6 @@
 quality (operators/compress_ratio.py) — r8 oracle candidates."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
 
@@ -40,27 +39,6 @@ def test_tag_keywords_plan_is_narrow(spark, docs):
     assert "Exchange" not in plan  # one narrow map, no shuffle
 
 
-def test_keyword_doc_frequencies(spark, docs):
-    from citus_spark.operators.keyword_tag import (
-        keyword_doc_frequencies,
-        tag_keywords,
-    )
-
-    kws = ["hash", "join", "zzznever"]
-    freqs = {
-        r.keyword: r.n_docs
-        for r in keyword_doc_frequencies(docs, "text", kws).collect()
-    }
-    # cross-check one keyword against a direct count
-    direct = (
-        tag_keywords(docs, "text", kws)
-        .filter(F.array_contains("tags", "hash"))
-        .count()
-    )
-    assert freqs.get("hash") == direct > 0
-    assert "zzznever" not in freqs  # dead terms simply absent
-
-
 def test_compression_stats_deterministic(spark, docs):
     from citus_spark.operators.compress_ratio import compression_stats
 
@@ -92,23 +70,6 @@ def test_compression_separates_repetition(spark):
     assert out[1] < 0.1 < out[2]  # boilerplate compresses far better
 
 
-def test_compression_quality_filter(spark):
-    from citus_spark.operators.compress_ratio import (
-        compression_quality_filter,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "spam " * 300),
-            (2, "the quick brown fox jumps over the lazy dog and then "
-                "discusses query planners with a marmot at length"),
-        ],
-        "doc_id int, text string",
-    )
-    kept = compression_quality_filter(df, "text").collect()
-    assert [r.doc_id for r in kept] == [2]
-
-
 def test_tag_keywords_rejects_unmatchable_terms(spark):
     from citus_spark.operators.keyword_tag import tag_keywords
 
@@ -127,10 +88,7 @@ def test_tag_keywords_rejects_unmatchable_terms(spark):
 
 
 def test_compression_null_and_empty_text(spark):
-    from citus_spark.operators.compress_ratio import (
-        compression_quality_filter,
-        compression_stats,
-    )
+    from citus_spark.operators.compress_ratio import compression_stats
 
     df = spark.createDataFrame(
         [(1, None), (2, ""),
@@ -143,8 +101,6 @@ def test_compression_null_and_empty_text(spark):
         for r in compression_stats(df, "text").collect()
     }
     assert out[1] == (0, 0) and out[2] == (0, 0)  # null == absent
-    kept = [r.doc_id for r in compression_quality_filter(df, "text").collect()]
-    assert kept == [3]  # empty/null never pass a content filter
 
 
 def test_compression_string_id_column(spark):

@@ -1,12 +1,8 @@
-"""Multimodal binary-column plumbing and the streaming rollup idiom."""
-
-import os
-import shutil
+"""Multimodal binary-column plumbing."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from citus_spark.queries import normalize_events_ts
 from tests.conftest import SF_SMALL
 
 
@@ -62,15 +58,14 @@ def test_decode_image_real_png_roundtrip(spark):
     assert got[4].width is None and got[4].n_bytes == 16
 
 
-def test_resize_and_ahash_real_paths(spark):
-    """Real resize re-encodes valid PNG at the target shape; real
-    aHash is invariant to uniform brightness shifts (decode-level
-    property the fake byte hash cannot have) and flips few bits for a
-    small perturbation."""
+def test_ahash_real_path(spark):
+    """Real aHash is invariant to uniform brightness shifts
+    (decode-level property the fake byte hash cannot have) and flips
+    few bits for a small perturbation."""
     import numpy as np
 
-    from citus_spark.operators.imagecodec import decode_png, encode_png
-    from citus_spark.operators.multimodal import image_ahash, resize_image
+    from citus_spark.operators.imagecodec import encode_png
+    from citus_spark.operators.multimodal import image_ahash
 
     rng = np.random.default_rng(11)
     base = rng.integers(40, 200, (32, 32, 3), dtype=np.uint8)
@@ -85,9 +80,6 @@ def test_resize_and_ahash_real_paths(spark):
         ],
         "id long, media binary",
     )
-
-    out = {r.id: bytes(r.media) for r in resize_image(media, 8, 8, fake=False).collect()}
-    assert decode_png(out[1]).shape == (8, 8, 3)
 
     h = {r.id: r.phash for r in image_ahash(media, fake=False).collect()}
     assert h[1] == h[2], "uniform brightness shift must not change aHash"
@@ -116,53 +108,6 @@ def test_frame_sample(media):
     frames = frame_sample(media, every_n=2)
     rows = frames.groupBy("id").count().collect()
     assert all(r["count"] >= 1 for r in rows)
-
-
-def test_resize_deterministic(media):
-    from citus_spark.operators.multimodal import resize_image
-
-    out = resize_image(media, 8, 8).collect()
-    assert all(len(r.media) == 8 * 8 * 3 for r in out)
-
-
-def test_streaming_rollup_matches_batch(spark, tmp_path):
-    """Drive the Structured Streaming rollup over the events fixture
-    and compare with the equivalent batch aggregation."""
-    from citus_spark.streaming.rollup import run_rollup_to_table
-
-    src = str(tmp_path / "events_src")
-    os.makedirs(src)
-    shutil.copy(f"{SF_SMALL}/events.parquet", f"{src}/events.parquet")
-    rollup = str(tmp_path / "rollup")
-
-    run_rollup_to_table(spark, src, rollup, window="1 hour")
-
-    got = {
-        (r.window_start, r.event_type): (r.n, round(r.total_value, 6))
-        for r in spark.read.parquet(rollup).collect()
-    }
-    ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").transform(normalize_events_ts)
-    want = {
-        (r.w, r.event_type): (r.n, round(r.total_value, 6))
-        for r in ev.groupBy(
-            F.window("ts", "1 hour").getField("start").alias("w"), "event_type"
-        )
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-        .collect()
-    }
-    assert got == want
-
-    # incremental batch: append a second copy of the data → counts double
-    shutil.copy(f"{SF_SMALL}/events.parquet", f"{src}/events2.parquet")
-    run_rollup_to_table(spark, src, rollup, window="1 hour", queryName="r2")
-    got2 = {
-        (r.window_start, r.event_type): r.n
-        for r in spark.read.parquet(rollup).collect()
-    }
-    # no checkpoint in this test → the new run reprocesses both files;
-    # update-mode emits final totals per window (2× data) and the
-    # upsert replaces by key → rollup shows 2× original counts
-    assert all(got2[k] == 2 * want[k][0] for k in want)
 
 
 def test_audio_features_fake(media):

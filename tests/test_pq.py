@@ -4,7 +4,6 @@ determinism, and planted-neighbor recall with exact rescore."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
 
@@ -103,57 +102,3 @@ def test_adc_only_mode_orders_by_table_lookups(spark, emb):
     ).collect()
     assert len(out) == 5
     assert [r.adc_dist for r in out] == sorted(r.adc_dist for r in out)
-
-
-def test_ivfpq_scan_bound_and_planted_recall(spark):
-    """IVF-PQ composite: the cell filter must bound the scanned
-    fraction to ~nprobe/n_cells, and residual-ADC + exact rescore must
-    still find planted neighbors routed to the probed cells."""
-    from citus_spark.operators.pq import ivfpq_encode, ivfpq_topk, ivfpq_train
-
-    rng = np.random.default_rng(5)
-    # clustered corpus: 8 well-separated centers ×50 points
-    centers = 10.0 * rng.normal(size=(8, 64))
-    pts = np.repeat(centers, 50, axis=0) + rng.normal(size=(400, 64))
-    rows = [(int(i), [float(v) for v in pts[i]]) for i in range(400)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-    cells, books = ivfpq_train(df, n_cells=8, m=8, k=16, sample=400)
-    enc = ivfpq_encode(df, cells, books).cache()
-
-    # scan bound: each query probes 2 of 8 cells
-    cell_sizes = {r.cell_id: r.n for r in
-                  enc.groupBy("cell_id").agg(F.count("*").alias("n")).collect()}
-    assert len(cell_sizes) == 8
-
-    hits = 0
-    for qi in range(0, 80, 10):  # one query per planted cluster
-        q = pts[qi] + 0.01 * rng.normal(size=64)
-        top = ivfpq_topk(enc, q, cells, books, nprobe=2, k=3).collect()
-        if top and top[0].vec_id == qi:
-            hits += 1
-    enc.unpersist()
-    assert hits >= 7  # ≥7/8 queries find their planted source
-
-def test_ivfpq_nprobe_monotone_and_deterministic(spark):
-    from citus_spark.operators.pq import ivfpq_encode, ivfpq_topk, ivfpq_train
-    from citus_spark.queries import load_views
-
-    load_views(spark, SF_SMALL)
-    emb = spark.table("embeddings").select("vec_id", "embedding")
-    cells, books = ivfpq_train(emb, n_cells=8, m=8, k=16, sample=512)
-    q = emb.filter("vec_id = 7").collect()[0].embedding
-
-    enc7 = ivfpq_encode(emb.repartition(7), cells, books)
-    enc1 = ivfpq_encode(emb.coalesce(1), cells, books)
-    a = ivfpq_topk(enc7, q, cells, books, nprobe=2, k=5).collect()
-    b = ivfpq_topk(enc1, q, cells, books, nprobe=2, k=5).collect()
-    assert [(r.vec_id, round(r.dist, 9)) for r in a] == [
-        (r.vec_id, round(r.dist, 9)) for r in b
-    ]
-    assert a[0].vec_id == 7 and a[0].dist == 0.0  # own cell always probed
-
-    # more probes can only improve (never worsen) the exact top-k
-    d2 = [r.dist for r in ivfpq_topk(enc1, q, cells, books, nprobe=2, k=5).collect()]
-    d8 = [r.dist for r in ivfpq_topk(enc1, q, cells, books, nprobe=8, k=5).collect()]
-    assert all(y <= x + 1e-12 for x, y in zip(d2, d8))

@@ -1,14 +1,8 @@
-"""Mergeable bottom-k quantile sketch: accuracy, merge algebra
-(incl. overlap idempotence), determinism."""
+"""Mergeable bottom-k quantile sketch: accuracy, determinism."""
 
 from pyspark.sql import functions as F
 
-from citus_spark.operators.quantile_sketch import (
-    approx_quantiles,
-    quantile_estimate,
-    quantile_sketch,
-    quantile_union,
-)
+from citus_spark.operators.quantile_sketch import approx_quantiles
 from tests.conftest import SF_SMALL
 
 
@@ -34,33 +28,8 @@ def test_accuracy_vs_exact(spark):
             assert abs(a - b) / b < 0.10, (k, got[k], want[k])
 
 
-def test_merge_with_overlap_is_idempotent(spark):
-    """Merging a sketch with itself must not change it (hash-unique
-    dedup) — and merging halves equals sketching the whole."""
-    o = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
-    whole = quantile_sketch(o, ["o_orderstatus"], "o_totalprice", "o_orderkey")
-    doubled = quantile_union(whole.unionAll(whole), ["o_orderstatus"])
-    a = {r.o_orderstatus: (r.hs, r.vs) for r in whole.collect()}
-    b = {r.o_orderstatus: (r.hs, r.vs) for r in doubled.collect()}
-    assert a == b
-
-    h1 = quantile_sketch(
-        o.filter("o_orderkey % 2 = 0"), ["o_orderstatus"], "o_totalprice", "o_orderkey"
-    )
-    h2 = quantile_sketch(
-        o.filter("o_orderkey % 2 = 1"), ["o_orderstatus"], "o_totalprice", "o_orderkey"
-    )
-    merged = quantile_union(h1.unionAll(h2), ["o_orderstatus"])
-    m = {r.o_orderstatus: (r.hs, r.vs) for r in merged.collect()}
-    assert m == a
-
-
 def test_deterministic(spark):
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-    a = quantile_estimate(
-        quantile_sketch(ev, ["event_type"], "value", "event_id"), ["event_type"]
-    ).collect()
-    b = quantile_estimate(
-        quantile_sketch(ev, ["event_type"], "value", "event_id"), ["event_type"]
-    ).collect()
+    a = approx_quantiles(ev, ["event_type"], "value", "event_id").collect()
+    b = approx_quantiles(ev, ["event_type"], "value", "event_id").collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))

@@ -1,18 +1,10 @@
-"""Change-feed apply: the streamed state must equal the batch
-latest-op-per-key computation for ANY file/batch arrival order, and
-replaying the feed must be a no-op (idempotence) — the consistency
-contract of a WAL-shaped CDC consumer."""
+"""Change-feed apply: the state must equal the one-shot
+latest-op-per-key computation for ANY batch arrival order — the
+consistency contract of a WAL-shaped CDC consumer."""
 
-import os
 import random
 
-from pyspark.sql import functions as F
-
-from citus_spark.streaming.cdc_apply import (
-    apply_changes,
-    read_current,
-    run_apply_to_table,
-)
+from citus_spark.streaming.cdc_apply import apply_changes
 
 
 def _feed(seed=5):
@@ -37,54 +29,6 @@ def _feed(seed=5):
 
 
 SCHEMA = "op string, seq long, k long, amount long, note string"
-
-
-def _expected(rows):
-    """Batch oracle: payload of the max-seq op per key, minus keys
-    whose max-seq op is a delete."""
-    best = {}
-    for op, seq, k, amount, note in rows:
-        if k not in best or seq > best[k][1]:
-            best[k] = (op, seq, amount, note)
-    return {
-        k: (v[2], v[3]) for k, v in best.items() if v[0] != "delete"
-    }
-
-
-def test_streamed_apply_equals_batch_oracle(spark, tmp_path):
-    import glob
-    import shutil
-
-    rows = _feed()
-    feed_dir = str(tmp_path / "feed")
-    os.makedirs(feed_dir)
-    # four unordered shards — no file contains a contiguous seq range;
-    # each shard must be a FLAT file in the stream directory
-    for i in range(4):
-        stage = str(tmp_path / f"stage{i}")
-        spark.createDataFrame(rows[i::4], SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        src = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-        shutil.move(src, os.path.join(feed_dir, f"part{i}.parquet"))
-    state = str(tmp_path / "state")
-
-    run_apply_to_table(spark, feed_dir, state, keys=["k"])
-    got = {
-        r.k: (r.amount, r.note) for r in read_current(spark, state).collect()
-    }
-    assert got == _expected(rows)
-
-    # tombstones are retained in the raw state (resurrection guard)
-    raw = spark.read.parquet(state)
-    assert raw.filter(F.col("op") == "delete").count() > 0
-
-    # replaying the whole feed into the same state is a no-op
-    run_apply_to_table(spark, feed_dir, state, keys=["k"], queryName="replay")
-    got2 = {
-        r.k: (r.amount, r.note) for r in read_current(spark, state).collect()
-    }
-    assert got2 == got
 
 
 def test_pure_apply_is_order_insensitive(spark):
@@ -123,56 +67,3 @@ def test_parse_debezium_decodes_ops_and_tombstones(spark):
     assert by_id[1].op == "upsert" and by_id[1].v == 20 and by_id[1].seq == 2
     # delete retained as tombstone with null payload
     assert by_id[2].op == "delete" and by_id[2].v is None and by_id[2].seq == 3
-
-
-def test_streamed_envelope_feed_matches_batch(spark, tmp_path):
-    """End-to-end Debezium text feed: three shard files of JSON
-    envelopes, deliberately written so later-seq changes land in
-    EARLIER-listed files, streamed one file per micro-batch through
-    parse_debezium + apply. Final state must equal the one-shot batch
-    apply of all envelopes, and deletes must hold against the
-    out-of-order resurrect in the last file."""
-    import json
-
-    from citus_spark.streaming.cdc_apply import (
-        apply_changes,
-        parse_debezium,
-        run_envelope_apply_to_table,
-    )
-
-    def env(op, seq, k, v=None):
-        after = "null" if v is None else json.dumps({"v": v})
-        return (
-            f'{{"op":"{op}","seq":{seq},"key":{{"id":{k}}},"after":{after}}}'
-        )
-
-    shards = [
-        [env("c", 5, 1, 50), env("d", 9, 2)],
-        [env("c", 1, 2, 20), env("u", 7, 1, 70)],
-        [env("u", 2, 1, 21), env("u", 8, 2, 80)],  # id2 resurrect < seq 9
-    ]
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    for i, lines in enumerate(shards):
-        (feed / f"shard{i}.json").write_text("\n".join(lines) + "\n")
-
-    state_path = str(tmp_path / "state")
-    run_envelope_apply_to_table(
-        spark, str(feed), state_path, "id BIGINT", "v BIGINT", keys=["id"]
-    )
-    streamed = {
-        (r.id, r.op, r.seq, r.v)
-        for r in spark.read.parquet(state_path).collect()
-    }
-
-    all_env = spark.createDataFrame(
-        [(line,) for lines in shards for line in lines], "value string"
-    )
-    batch = apply_changes(
-        None,
-        parse_debezium(all_env, "value", "id BIGINT", "v BIGINT"),
-        keys=["id"],
-    )
-    assert streamed == {(r.id, r.op, r.seq, r.v) for r in batch.collect()}
-    assert (1, "upsert", 7, 70) in streamed
-    assert (2, "delete", 9, None) in streamed  # tombstone survived

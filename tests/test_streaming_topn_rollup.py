@@ -1,9 +1,6 @@
-"""Streaming top-N rollup: the incrementally-maintained topn sketch
-states must finalize to the same heavy hitters as a one-shot batch
-computation — including items whose counts accumulate across
-micro-batches (the case a per-batch top-k gets wrong)."""
-
-import os
+"""Streaming top-N rollup: the stored form is mergeable topn sketch
+states, so states maintained one micro-batch at a time re-aggregate
+to the same heavy hitters as a one-shot batch computation."""
 
 from pyspark.sql import functions as F
 
@@ -11,64 +8,18 @@ from citus_spark.queries import normalize_events_ts
 from tests.conftest import SF_SMALL
 
 
-def _split_source(spark, tmp_path, n_parts=3):
-    src = str(tmp_path / "src")
-    ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-    ev.repartition(n_parts).write.parquet(src)
-    for f in os.listdir(src):
-        if not f.endswith(".parquet"):
-            os.unlink(os.path.join(src, f))
-    return src
-
-
-def _batch_topk(spark, src):
-    from citus_spark.operators.topn import topn
-    from citus_spark.streaming.topn_rollup import K
-
-    ev = spark.read.parquet(src).transform(normalize_events_ts)
-    keyed = ev.select(
-        F.window("ts", "1 hour").start.alias("window_start"), "event_type"
-    )
-    return {
-        (r.window_start, r.rank): (r.event_type, r.cnt)
-        for r in topn(keyed, ["window_start"], "event_type", K).collect()
-    }
-
-
-def test_streaming_topn_rollup_matches_batch(spark, tmp_path):
-    from citus_spark.streaming.topn_rollup import (
-        read_topn_rollup,
-        run_topn_rollup_to_table,
-    )
-
-    src = _split_source(spark, tmp_path)
-    state = str(tmp_path / "state")
-    run_topn_rollup_to_table(spark, src, state)
-
-    got = {
-        (r.window_start, r.rank): (r.item, r.cnt)
-        for r in read_topn_rollup(spark, state).collect()
-    }
-    want = _batch_topk(spark, src)
-    # event_type cardinality < slack*k => the sketch is lossless and
-    # the incrementally-merged extraction EQUALS the exact batch top-k
-    assert got == want
-    assert len({w for w, _ in got}) > 1  # several windows
-
-
 def test_topn_states_reaggregate_to_coarser_window(spark, tmp_path):
     """Stored form is sketches, not numbers: merging the hourly states
     down to one global group must equal a direct global top-k."""
     from citus_spark.operators.topn import topn, topn_extract, topn_union
-    from citus_spark.streaming.topn_rollup import (
-        K,
-        SLACK,
-        run_topn_rollup_to_table,
-    )
+    from citus_spark.streaming.topn_rollup import K, SLACK, apply_topn_batch
 
-    src = _split_source(spark, tmp_path)
+    ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").transform(
+        normalize_events_ts
+    )
     state = str(tmp_path / "state")
-    run_topn_rollup_to_table(spark, src, state)
+    for w in range(3):
+        apply_topn_batch(spark, ev.filter(F.col("event_id") % 3 == w), state)
 
     states = spark.read.parquet(state).withColumn("g", F.lit(1))
     merged = topn_union(states.drop("window_start"), ["g"], K, slack=SLACK)
@@ -76,11 +27,8 @@ def test_topn_states_reaggregate_to_coarser_window(spark, tmp_path):
         r.rank: (r.item, r.cnt)
         for r in topn_extract(merged, ["g"], K).collect()
     }
-    ev = spark.read.parquet(src).transform(normalize_events_ts).withColumn(
-        "g", F.lit(1)
-    )
     want = {
         r.rank: (r.event_type, r.cnt)
-        for r in topn(ev, ["g"], "event_type", K).collect()
+        for r in topn(ev.withColumn("g", F.lit(1)), ["g"], "event_type", K).collect()
     }
     assert got == want

@@ -11,9 +11,6 @@ from citus_spark.operators.tdigest import (
     DELTA,
     _compress,
     _estimate,
-    tdigest_sketch,
-    tdigest_union,
-    tdigest_estimate,
     approx_quantiles_tdigest,
 )
 from tests.conftest import SF_SMALL
@@ -100,27 +97,3 @@ def test_spark_path_grouped_quantiles(spark):
         assert abs(np.mean(v <= r.p50) - 0.5) <= tol
         assert abs(np.mean(v <= r.p99) - 0.99) <= tol
 
-
-def test_sketch_union_estimate_roundtrip(spark):
-    """Rollup idiom: per-half digest states union to the full-corpus
-    digest (↔ storing tdigest values in rollup tables and merging at
-    query time)."""
-    df = spark.read.parquet(f"{SF_SMALL}/orders.parquet")
-    lo = df.filter(df.o_orderkey % 2 == 0)
-    hi = df.filter(df.o_orderkey % 2 == 1)
-    sk = tdigest_sketch(lo, ["o_orderpriority"], "o_totalprice").unionByName(
-        tdigest_sketch(hi, ["o_orderpriority"], "o_totalprice")
-    )
-    merged = tdigest_union(sk, ["o_orderpriority"])
-    est = tdigest_estimate(merged, ["o_orderpriority"], quantiles=(0.9,)).collect()
-    vals = {
-        r.o_orderpriority: r.p90 for r in est
-    }
-    all_rows = df.select("o_orderpriority", "o_totalprice").collect()
-    by_group: dict[str, list[float]] = {}
-    for r in all_rows:
-        by_group.setdefault(r.o_orderpriority, []).append(r.o_totalprice)
-    for prio, xs in by_group.items():
-        v = np.sort(np.array(xs))
-        tol = 0.01 + 2.0 / len(v)
-        assert abs(np.mean(v <= vals[prio]) - 0.9) <= tol

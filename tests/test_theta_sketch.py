@@ -1,6 +1,5 @@
-"""Theta sketch: merge of part-sketches equals the whole-data sketch
-exactly (determinism + associativity), NDV estimates land within KMV
-error bounds, and intersection estimates track exact overlaps."""
+"""Theta sketch: NDV estimates land within KMV error bounds, and
+intersection estimates track exact overlaps."""
 
 import math
 
@@ -14,35 +13,6 @@ def _tokens(spark):
     return docs.select(
         "source", F.explode(F.split("text", " ")).alias("tok")
     )
-
-
-def test_merge_of_parts_equals_whole(spark):
-    from citus_spark.operators.theta_sketch import theta_sketch, theta_union
-
-    toks = _tokens(spark)
-    whole = theta_sketch(toks, ["source"], "tok", k=64)
-
-    part1 = theta_sketch(toks.filter(F.col("tok") < "m"), ["source"], "tok", k=64)
-    part2 = theta_sketch(toks.filter(F.col("tok") >= "m"), ["source"], "tok", k=64)
-    merged = (
-        part1.alias("a")
-        .join(part2.alias("b"), "source")
-        .select(
-            "source",
-            theta_union(F.col("a.sketch"), F.col("b.sketch"), k=64).alias(
-                "sketch"
-            ),
-        )
-    )
-    got = {r.source: r.sketch for r in merged.collect()}
-    want = {r.source: r.sketch for r in whole.collect()}
-    assert got == want
-
-    # idempotent on overlap: merging the whole with itself is a no-op
-    self_merged = whole.select(
-        "source", theta_union(F.col("sketch"), F.col("sketch"), k=64).alias("s2")
-    )
-    assert {r.source: r.s2 for r in self_merged.collect()} == want
 
 
 def test_ndv_estimate_within_kmv_bounds(spark):

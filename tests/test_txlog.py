@@ -1,8 +1,6 @@
 """Transaction-log table format: snapshot isolation, atomic MERGE,
 optimistic concurrency, crash safety, time travel, vacuum."""
 
-import os
-
 import pytest
 
 from citus_spark.sources.txlog import Commit, ConcurrentWriteError, TxTable
@@ -206,32 +204,6 @@ def test_restore_rolls_back_and_is_auditable(spark, orders, tmp_path):
     t.vacuum(retain_versions=1)
     with pytest.raises(ValueError, match="vacuumed"):
         t.restore(0)
-
-
-def test_streaming_tx_sink_exactly_once(spark, tmp_path):
-    """Replaying every epoch from a fresh checkpoint (the crash-
-    recovery worst case: all progress lost) must not duplicate a
-    single row."""
-    import shutil
-
-    from tests.conftest import SF_SMALL
-
-    from citus_spark.streaming.tx_sink import run_stream_to_txtable
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    shutil.copy(f"{SF_SMALL}/events.parquet", f"{src}/events.parquet")
-    table = str(tmp_path / "tx")
-
-    run_stream_to_txtable(spark, src, table)
-    t = TxTable(spark, table)
-    n = t.read().count()
-    assert n == spark.read.parquet(src).count()
-
-    # second run, fresh checkpoint: every epoch replays with the same
-    # ids — all must be skipped by the txn markers
-    run_stream_to_txtable(spark, src, table)
-    assert t.read().count() == n
 
 
 # ---------------------------------------------------------------------------

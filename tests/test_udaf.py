@@ -3,32 +3,8 @@
 import pytest
 from pyspark.sql import functions as F
 
-from citus_spark.operators.udaf import distributed_agg, median_spec, weighted_mean_spec
+from citus_spark.operators.udaf import distributed_agg, median_spec
 from tests.conftest import SF_SMALL
-
-
-def test_weighted_mean_matches_sql(spark):
-    ev = spark.read.parquet(f"{SF_SMALL}/events.parquet")
-    # weight = event_id % 5 + 1 (deterministic), value = value
-    src = ev.select(
-        "event_type",
-        F.col("value").alias("v"),
-        (F.col("event_id") % 5 + 1).cast("double").alias("w"),
-    )
-    spec = weighted_mean_spec(["event_type"], "v", "w")
-    got = {
-        r.event_type: r.weighted_mean
-        for r in distributed_agg(src, ["event_type"], spec).collect()
-    }
-    want = {
-        r.event_type: r.wm
-        for r in src.groupBy("event_type")
-        .agg((F.sum(F.col("v") * F.col("w")) / F.sum("w")).alias("wm"))
-        .collect()
-    }
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], rel=1e-9)
 
 
 def test_median_matches_percentile(spark):
@@ -53,9 +29,8 @@ def test_partial_runs_per_partition(spark):
     """The state stream must contain one state row per (partition,
     group) — i.e. the partial stage really is map-side."""
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").repartition(4)
-    src = ev.select("event_type", F.col("value").alias("v"),
-                    F.lit(1.0).alias("w"))
-    spec = weighted_mean_spec(["event_type"], "v", "w")
+    src = ev.select("event_type", F.col("value").alias("v"))
+    spec = median_spec(["event_type"], "v")
 
     def partial_batches(it):
         for pdf in it:
